@@ -1,24 +1,30 @@
 """End-to-end stage DAG (SURVEY §3.1): ingest → uniq → signatures → pairs →
-verify → cluster → publish, each stage wrapped in the resumable gate (io.py).
+verify → cluster → publish.
 
-Shuffle discipline notes (the 100-TB design, SURVEY §4):
-- The SOURCE is scanned — and sha256-hashed — exactly once: the `ingest`
-  stage carries ids + shas + content; `files` is a column-pruned projection
-  of it (metadata consumers never touch content pages), and `uniq` collapses
-  from the same relation with a single hash aggregate. (Round 1 re-scanned
-  and re-hashed the corpus for `files` and `uniq` separately — 2 full
-  content scans and 2x sha256 CPU at 100 TB.) The trade: the ingest stage
-  checkpoint stores content once more; against a remote production table,
-  one local stage write is cheaper than a second full remote scan + hash.
-- `content` is shuffled exactly once (the uniq collapse); signatures, bands,
-  pairs and clustering shuffle only ids + fixed-width sketches. The LCS
-  residue re-joins content for the (small) set of gated pairs only.
-- Stage checkpoints mean each shuffle's input is a pruned columnar parquet,
-  and a resumed run replays nothing upstream of the first incomplete stage.
-- Every persist this run creates is tracked: internal helper caches are
-  unpersisted as soon as their consumer stage materializes, and
-  ``PipelineResult.release()`` frees the stage caches when the caller is
-  done (repeated runs in one session no longer accumulate storage).
+Stored-stage rule. With a checkpoint every stage goes through the
+resumable gate (io.py): written as parquet and read back, so each consumer
+plans against the stored rows. Without one:
+- ingest, the exact-dup winners, uniq and signatures are persisted and
+  filled by ONE action (the signature count);
+- every stage after signatures — candidate pairs, the rep-pair verdicts,
+  the escalated pair list, wave-1 and wave-2 verified pairs and
+  clusters_uniq — is materialized exactly once, inside its own named
+  barrier, by ``localCheckpoint(eager=True)``, and passed on with its
+  lineage cut. Left lazy, the CC probe ran wave-1 deep verify, all of
+  wave 2 and the CC input as one fused action whose plans re-analysed the
+  whole LSH/verify DAG under every reference (perfbench hot_buckets, 4
+  cores: 80 -> 105 files/s with the cuts; persist + count per stage
+  instead measured slower);
+- the publish stage stays lazy: the caller reads it once;
+- ``PipelineResult.release()`` frees every cache and checkpoint the run
+  stored, so repeated runs in one session do not accumulate storage.
+
+Shuffle discipline (the 100-TB design, SURVEY §4): the source is scanned
+and sha256-hashed exactly once (``files`` is a column-pruned projection of
+the ingest stage and ``uniq`` collapses from the same relation);
+``content`` is shuffled once (the uniq collapse) and re-joined only for
+the gated deep-verify residue; every other stage moves ids and
+fixed-width sketches.
 """
 
 from __future__ import annotations
@@ -52,21 +58,9 @@ def ensure_min_partitions(df: DataFrame, n: int) -> DataFrame:
 
 @dataclass
 class PipelineResult:
-    """Result handle for one pipeline run.
-
-    RECOMPUTE CLIFF (read this if you consume the pair/cluster frames
-    after the run): in no-checkpoint mode with ``collect_metrics=False``,
-    ``cand_pairs``/``verified_pairs``/``clusters``/``clusters_uniq`` are
-    LAZY — they fused into the cluster job that already ran, and the
-    internal helper caches (salted buckets, pair metadata) are drained as
-    soon as their consumer stage materializes. An action on these public
-    DataFrames afterwards therefore re-executes candidate generation and
-    the deep Arrow verify cascade from the (still cached) uniq/signature
-    stages (ADVICE r3). Call :meth:`materialize` first if you intend to
-    read them more than once, run with ``collect_metrics=True`` (which
-    persists them), or run with ``ckpt`` (which reads them back from
-    stage parquet).
-    """
+    """Result handle for one pipeline run. Without a checkpoint the frames
+    read the run's stored stages; call :meth:`release` once done reading
+    them."""
 
     clusters: DataFrame        # one row per input row: keys + cluster_id
     clusters_uniq: DataFrame   # per canonical content: file_id, cluster_id
@@ -75,31 +69,17 @@ class PipelineResult:
     stages: dict = field(default_factory=dict)   # name -> stage DataFrame
     _persisted: list = field(default_factory=list)
 
-    def materialize(self) -> "PipelineResult":
-        """Persist + fill the lazy public result frames so subsequent
-        actions on them read caches instead of re-running the LSH/verify
-        plan (see the class docstring). Costs one pass over the lazy
-        chain; released like every other cache by :meth:`release`."""
-        targets = [df for df in (self.stages.get("cand_pairs"),
-                                 self.verified_pairs, self.clusters_uniq,
-                                 self.clusters) if df is not None]
-        for df in targets:
-            lvl = df.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                df.persist()
-                self._persisted.append(df)
-        for df in targets:
-            df.count()
-        return self
-
     def release(self) -> None:
-        """Unpersist every cached stage this run created (no-checkpoint
-        mode). Downstream DataFrames stay valid — they just recompute."""
+        """Free every cache and local checkpoint this run stored
+        (no-checkpoint mode). Frames over a released checkpoint can no
+        longer be read. ``unpersist`` reaches a cache but not a local
+        checkpoint, whose blocks live on the RDD under its LogicalRDD
+        plan."""
         for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            df.unpersist()
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.nodeName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
         self._persisted.clear()
 
 
@@ -110,30 +90,24 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     cfg = cfg or DedupConfig()
     ch = cfg.config_hash()
     stage_caches: list[DataFrame] = []   # released by PipelineResult.release
+    stored: dict[str, DataFrame] = {}    # stages stored in place, by name
     cand_internals: list[DataFrame] = []    # salted-bucket cache (L2/L3)
-    verify_internals: list[DataFrame] = []  # pair-metadata cache (V0)
+    verify_internals: list[DataFrame] = []  # pair-metadata caches (V0)
 
-    def gate(name, fn, eager=True, lineage=True,
-             extra_manifest=None, require_manifest=None):
-        """Stage gate. Ckpt mode: always materialized via run_stage (the
-        resumability contract). No-ckpt mode: stages with >1 downstream
-        consumer are persisted EAGERLY (a lazy persist races cold inside the
-        first multi-branch action and each branch recomputes); SINGLE-
-        consumer stages stay lazy — they fuse into their consumer's job, so
-        runs pay fewer sequential driver barriers (the ~28s/run serial term
-        measured in BENCH/BASELINE.md r2) and at scale never materialize an
-        intermediate nobody reads twice."""
-        if ckpt:
-            return run_stage(spark, ckpt, ch, name, fn, lineage=lineage,
-                             extra_manifest=extra_manifest,
-                             require_manifest=require_manifest)
-        df = fn()
-        if eager:
-            df = df.persist()
-            with barrier(f"p_gate_{name}"):
-                df.count()
-            stage_caches.append(df)
+    def store(name, df):
+        """Materialize a stage once, with its lineage cut. Ckpt mode
+        stores only the rep verdicts and the escalated list this way,
+        inside its gated verify stages."""
+        with barrier(f"p_{name}"):
+            df = df.localCheckpoint(eager=True)
+        stage_caches.append(df)
+        stored[name] = df
         return df
+
+    def gate(name, fn, **kw):
+        if ckpt:
+            return run_stage(spark, ckpt, ch, name, fn, **kw)
+        return store(name, fn())
 
     def drain(handles):
         for h in handles:
@@ -168,10 +142,10 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     # No-ckpt mode runs this agg BEHIND the signature fill (round 5): the
     # signature action materializes the ingest cache first, so the agg
     # reads hot cache and costs ~a cache scan instead of a second full
-    # corpus pass + its own driver barrier (fitted serial ~3s/run,
-    # BENCH/BASELINE.md r5 barrier table). Collisions then cost a rebuild
-    # of uniq+signatures — the right trade for a ~2^-45 event at bench
-    # scale (and at 10^12 rows the resolution pass re-derives them anyway).
+    # corpus pass. Collisions then cost a rebuild of uniq+signatures — the
+    # right trade for a ~2^-45 event. Overlapping the agg with the
+    # candidate chain from a second thread measured a tie, so it runs
+    # in line.
     def _files_agg():
         with barrier("p_files_agg"):
             return files.agg(F.count("*").alias("n"),
@@ -271,60 +245,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
                 s.count()          # ONE action fills ingest, uniq AND sigs
             return w, u, s
         winners, uniq, signatures = _build_sig()
-        # F2 agg OVERLAPPED with the candidate chain (round 6): the agg
-        # reads only the hot hashed/files caches, the candidate chain only
-        # the signatures cache — independent given _build_sig's fill, so
-        # the agg's ~2 s barrier hides behind l_salted_fill instead of
-        # preceding it (guide §2.6 overlap-independent-jobs). The thread
-        # is joined right after the candidate gate; on the (~2^-45)
-        # collision path everything derived from the ids — candidates
-        # included — is rebuilt below, exactly as the sequential
-        # formulation rebuilt uniq/signatures.
-        import threading
-
-        fa_box: dict = {}
-
-        def _fa():
-            try:
-                fa_box["row"] = _files_agg()
-            except BaseException as e:      # re-raised on the main thread
-                fa_box["err"] = e
-        fa_thread = threading.Thread(target=_fa, daemon=True)
-        fa_thread.start()
-
-    # cand/verified/clusters_uniq each have exactly ONE pipeline consumer;
-    # metrics mode adds a second (the count actions below), so they are
-    # eager only then. Note verify_pairs materializes its own pair-metadata
-    # cache internally, which consumes cand exactly once either way.
-    multi = bool(collect_metrics)
-
-    cand_stats: dict = {}
-
-    def _cand():
-        bands = lsh.explode_bands(signatures)
-        return lsh.candidate_pairs(bands, cfg, handles=cand_internals,
-                                   stats=cand_stats)
-
-    def _make_cand():
-        c = gate("cand_pairs", _cand, eager=multi)
-        if not ckpt and not multi:
-            # LAZY plan truncation: the candidate list is referenced by
-            # wave 1's metadata join AND the escalation anti-join; as a raw
-            # plan the multi-stage LSH DAG is re-analyzed (and with AQE
-            # re-planned per stage) under every reference. The lazy
-            # localCheckpoint materializes once inside the first consuming
-            # action (wave 1's meta agg — no extra barrier) and every later
-            # reference plans against a flat LogicalRDD. Pair rows are 24
-            # bytes — at 10^12-row scale the checkpoint is a fixed-width
-            # store, not a content copy.
-            c = c.localCheckpoint(eager=False)
-        return c
-    cand = _make_cand()
-    if not ckpt:
-        fa_thread.join()
-        if "err" in fa_box:
-            raise fa_box["err"]
-        row = fa_box["row"]
+        row = _files_agg()
         n_files = row["n"]
         if row["n"] != row["d"]:
             # rare path: re-salt ids, rebuild everything derived from them
@@ -338,15 +259,21 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             stage_caches.append(files)
             winners, uniq, signatures = _build_sig()
             files.count()          # refill the pruned projection too
-            drain(cand_internals)  # candidates derived from the OLD ids
-            cand_stats.clear()
-            cand = _make_cand()
         hashed.unpersist()
         stage_caches.remove(hashed)
 
+    cand_stats: dict = {}
+
+    def _cand():
+        bands = lsh.explode_bands(signatures)
+        return lsh.candidate_pairs(bands, cfg, handles=cand_internals,
+                                   stats=cand_stats)
+
+    cand = gate("cand_pairs", _cand)
+
     esc_holder: dict = {}
 
-    def _wave2_pairs():
+    def _esc_pairs():
         """Escalation candidate pairs (wave-2 input; VERDICT r4 next #7):
         salt pairs whose rep_k^2 rep chances ALL failed get their full
         cross-salt member pairs re-verified through the SAME cascade —
@@ -354,20 +281,11 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         capped bucket stays silently disconnected. Returns None when
         escalation is off or provably irrelevant (nothing salted).
 
-        The failed-salt-pair decision needs rep-pair verdicts ONLY, so it
-        is fed a SEPARATELY-verified rep-pair table (tiny: <= rep_k^2
-        rows per salted sub-bucket pair, same frozen deterministic
-        cascade => verdicts identical to wave-1's rows for those pairs).
-        Round 4 derived it from wave 1 itself, which made the escalation
-        count barrier materialize the ENTIRE wave-1 cascade serially
-        before CC could start — barrier-attributed at 29s of the 80s
-        local[8] 200k run (82s of 170s at local[2]). With the decision
-        decoupled, wave 1 is referenced exactly once (the published
-        union) and the whole verify DAG stays lazy until CC's one
-        materializing action; the only added barriers are the rep
-        table's own (small) meta agg + count. The escalated pair list is
-        returned LAZY — its (metrics-only) count is taken in the metrics
-        section, not on the hot path."""
+        The failed-salt-pair decision reads a SEPARATELY-verified rep-pair
+        table (tiny: <= rep_k^2 rows per salted sub-bucket pair, same
+        frozen cascade => verdicts identical to wave 1's for those
+        pairs), so it never waits on the whole wave-1 cascade (round 4:
+        29 of 80 s at 200k/local[8])."""
         if not cfg.escalate_failed_rep_pairs:
             return None
         # the free salted-row signal: 0 rows in salted sub-buckets means no
@@ -386,58 +304,53 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
                 return None
         # small bounded call: no meta-agg barrier, forced joined deep plan
         # (rep pairs ~ rep_k^2 per salted sub-bucket pair)
-        rep_verd = verify.verify_pairs(
+        rep_verd = store("rep_verify", verify.verify_pairs(
             lsh.cross_rep_pairs(salted, cfg.rep_k), signatures, uniq, cfg,
             handles=verify_internals, eager_meta=False,
-            formulation="joined").persist()
-        stage_caches.append(rep_verd)
-        with barrier("p_rep_verify"):
-            rep_verd.count()
-        # metrics-mode diag reads these (tiny, hot) rather than re-running
-        # the full wave-1 cascade through the published verified frame
-        esc_holder["salted"] = salted
-        esc_holder["rep_verd"] = rep_verd
-        return (lsh.escalation_pairs(salted, rep_verd, cfg)
-                .join(cand.select("a", "b"), on=["a", "b"], how="left_anti"))
+            formulation="joined"))
+        esc = store("esc_pairs",
+                    lsh.escalation_pairs(salted, rep_verd, cfg)
+                    .join(cand.select("a", "b"), on=["a", "b"],
+                          how="left_anti"))
+        # metrics mode reads these (stored, tiny) for the escalation diag
+        esc_holder.update(salted=salted, rep_verd=rep_verd, df=esc)
+        return esc
+
+    def _wave2(esc):
+        """Wave 2: the escalated pairs through the same cascade. Bounded by
+        escalate_max_members — small: no meta barrier, the joined deep
+        plan, and the escalation deep budget."""
+        v2 = verify.verify_pairs(esc, signatures, uniq, cfg,
+                                 handles=verify_internals,
+                                 eager_meta=False, formulation="joined",
+                                 deep_budget=cfg.escalate_deep_budget)
+        return v2 if ckpt else store("verified_w2", v2)
 
     def _verified():
-        """Wave 1 (the frozen cascade over every LSH candidate) + wave 2
-        (see _wave2_pairs) in one frame. Wave 2 may be EMPTY (all rep
-        pairs passed) — verifying an empty pair list is a no-op plan, so
-        no count barrier decides this on the hot path.
-
-        The rep-verify chain and wave 1's meta agg are INDEPENDENT given
-        the salted/signature/uniq caches (all hot by now), so they run
-        in overlapped Spark jobs from two driver threads — the pair of
-        barriers costs max() instead of sum() (VERDICT r4 next #1; both
-        only read caches, and Spark job submission is thread-safe)."""
+        """Wave 1 (the frozen cascade over every LSH candidate) unioned
+        with wave 2. The rep-verify chain only reads caches and stored
+        stages, so it runs from a second driver thread while wave 1's
+        Spark jobs run (Spark job submission is thread-safe)."""
         import threading
 
         box: dict = {}
 
         def rep_chain():
             try:
-                box["esc"] = _wave2_pairs()
+                box["esc"] = _esc_pairs()
             except BaseException as e:     # re-raised on the main thread
                 box["err"] = e
         t = threading.Thread(target=rep_chain, daemon=True)
         t.start()
         v1 = verify.verify_pairs(cand, signatures, uniq, cfg,
                                  handles=verify_internals)
+        if not ckpt:
+            v1 = store("verified_w1", v1)
         t.join()
         if "err" in box:
             raise box["err"]
         esc = box.get("esc")
-        if esc is None:
-            return v1
-        esc_holder["df"] = esc
-        # wave 2 is bounded by escalate_max_members — small: skip its
-        # meta barrier, force the joined deep plan
-        v2 = verify.verify_pairs(esc, signatures, uniq, cfg,
-                                 handles=verify_internals,
-                                 eager_meta=False, formulation="joined",
-                                 deep_budget=cfg.escalate_deep_budget)
-        return v1.unionByName(v2)
+        return v1 if esc is None else v1.unionByName(_wave2(esc))
 
     if ckpt and cfg.incremental_buckets > 0:
         # per-partition incremental resume for the DOMINANT stage
@@ -465,33 +378,26 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             require_manifest={"vp_buckets": B})
 
         def _esc_stage():
-            esc = _wave2_pairs()
+            esc = _esc_pairs()
             if esc is None:     # empty stage: Spark writes a schema-only
                 return spark.createDataFrame([], w1.schema)  # parquet file
-            esc_holder["df"] = esc
-            return verify.verify_pairs(esc, signatures, uniq, cfg,
-                                       handles=verify_internals,
-                                       eager_meta=False,
-                                       formulation="joined",
-                                       deep_budget=cfg.escalate_deep_budget)
+            return _wave2(esc)
         w2 = run_stage(spark, ckpt, ch, "verified_pairs_esc", _esc_stage,
                        lineage=False)
         verified = w1.unionByName(w2)
-    else:
-        verified = gate("verified_pairs", _verified, eager=multi,
+    elif ckpt:
+        verified = gate("verified_pairs", _verified,
                         extra_manifest={"vp_buckets": 0},
                         require_manifest={"vp_buckets": 0})
-    # salted-bucket cache: fully consumed once the pair-metadata table is
-    # materialized (inside verify_pairs, in both eager and lazy modes)
+    else:
+        verified = _verified()
+    # the salted-bucket and pair-metadata caches have no reader left
     drain(cand_internals)
+    drain(verify_internals)
 
     clusters_uniq = gate(
         "clusters_uniq",
-        lambda: cc.canonical_clusters(verified, signatures),
-        eager=multi)
-    # pair-metadata cache: consumed once the CC input prep materialized
-    # `verified` (lazy mode) / once the verified gate counted it (eager)
-    drain(verify_internals)
+        lambda: cc.canonical_clusters(verified, signatures))
 
     def _publish():
         # no-ckpt mode reuses the cached winners table for the
@@ -499,7 +405,8 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         # (uniq reloads from parquet), so it keeps the files re-aggregate
         return ingest.expand_exact(clusters_uniq, files,
                                    winners=None if ckpt else winners)
-    clusters = gate("clusters", _publish, eager=False)
+    clusters = (run_stage(spark, ckpt, ch, "clusters", _publish) if ckpt
+                else _publish())
 
     metrics = {"config_hash": ch, "n_files": n_files}
     health = None
@@ -519,17 +426,16 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             "n_rep_pairs_failed": hrow["n_rep_pairs_failed"] or 0,
             # 0 when no bucket salted, every rep pair passed, or the
             # verified stage was resumed from checkpoint (wave already
-            # folded into the stage parquet). Counted HERE (metrics mode
-            # only) — the hot path keeps the escalated list lazy.
+            # folded into the stage parquet).
             "n_escalation_pairs": (esc_holder["df"].count()
                                    if "df" in esc_holder else 0),
         })
         if "df" in esc_holder:
             # no-silent-caps: both escalation bounds (per-bucket oversize
             # + the run-level escalate_max_pairs budget) surface here —
-            # computed from the SAME (persisted, tiny) salted frame and
-            # rep-pair verdict table the hot path's decision used, never
-            # by re-running the wave-1 cascade
+            # computed from the SAME salted frame and stored rep-pair
+            # verdicts the hot path's decision used, never by re-running
+            # the wave-1 cascade
             drow = lsh.escalation_diag(
                 esc_holder["salted"], esc_holder["rep_verd"], cfg).first()
             metrics.update({k: drow[k] or 0 for k in
@@ -553,7 +459,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     return PipelineResult(clusters=clusters, clusters_uniq=clusters_uniq,
                           verified_pairs=verified, metrics=metrics,
                           stages={"ingest": hashed, "uniq": uniq,
-                                  "signatures": signatures,
+                                  "signatures": signatures, **stored,
                                   "cand_pairs": cand,
                                   "verified_pairs": verified,
                                   "clusters_uniq": clusters_uniq,

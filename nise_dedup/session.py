@@ -14,6 +14,30 @@ from pyspark.sql import SparkSession
 
 from nise_dedup.config import DedupConfig
 
+CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max",                  # cgroup v2
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes")  # v1
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo",
+                          cgroup_limits=CGROUP_LIMITS) -> str:
+    """Half of the memory this process may use: MemTotal, or the cgroup
+    limit when that is smaller ("max" or a missing file means none). In
+    local mode the driver JVM holds every executor, and the Python
+    workers and the OS need the other half; a fixed 24g default got the
+    JVM OOM-killed on a 15 GB box."""
+    with open(meminfo) as f:
+        total = next(int(line.split()[1]) * 1024 for line in f
+                     if line.startswith("MemTotal:"))
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return f"{max(512, total // 2 // 2**20)}m"
+
 
 def build_session(master: str | None = None,
                   cfg: DedupConfig | None = None,
@@ -66,7 +90,7 @@ def build_session(master: str | None = None,
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
-                os.environ.get("NISE_DRIVER_MEM", "24g"))
+                os.environ.get("NISE_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     # $NISE_SPARK_CONF: JSON dict of extra spark confs, applied LAST — the

@@ -112,64 +112,3 @@ def _rolling_hashes(b: np.ndarray, w: int) -> np.ndarray:
     np.cumsum(b.astype(np.uint64) * powers[:n], out=q[1:], dtype=np.uint64)
     return (q[w:] - q[: n - w + 1]) * inv_powers[: n - w + 1]
 
-
-def maybe_common_substring(a: bytes, b: bytes, min_len: int) -> bool:
-    """Sound seed-and-extend prefilter: returns False ONLY IF
-    LCS(a, b) < min_len is certain.
-
-    Any common substring of length L >= 2w-1 fully contains an aligned
-    w-gram of `a` (offset a multiple of w). With w = (min_len+1)//2, a miss
-    in the gram-set intersection proves LCS < min_len. Rolling-hash
-    collisions can only cause false *positives* (the exact suffix-array pass
-    then decides), never false negatives.
-    """
-    if min_len <= 1:
-        return True
-    la, lb = len(a), len(b)
-    if min(la, lb) < min_len:
-        return False
-    short, long_ = (a, b) if la <= lb else (b, a)
-    w = (min_len + 1) // 2
-    sb = np.frombuffer(short, dtype=np.uint8)
-    lb_arr = np.frombuffer(long_, dtype=np.uint8)
-    anchors = _rolling_hashes(sb, w)[::w]
-    grams = _rolling_hashes(lb_arr, w)
-    return bool(np.isin(anchors, grams).any())
-
-
-def has_common_substring(a: bytes, b: bytes, min_len: int):
-    """EXACT decision 'LCS(a, b) >= min_len', O(n):
-
-    intersect the rolling hashes of all min_len-grams of both strings, then
-    byte-verify a first-occurrence hit (an actual length-min_len common
-    substring implies equal gram hashes, so a miss is a certain False).
-    Returns True / False, or None in the astronomically-rare case where the
-    only hash hits are unverifiable collisions — caller falls back to the
-    exact suffix array.
-    """
-    if min_len <= 0:
-        return True
-    la, lb = len(a), len(b)
-    if min(la, lb) < min_len:
-        return False
-    ha = _rolling_hashes(np.frombuffer(a, dtype=np.uint8), min_len)
-    hb = _rolling_hashes(np.frombuffer(b, dtype=np.uint8), min_len)
-    common, ia, ib = np.intersect1d(ha, hb, return_indices=True)
-    if common.size == 0:
-        return False
-    for i, j in zip(ia, ib):
-        if a[i:i + min_len] == b[j:j + min_len]:
-            return True
-    return None  # hash hits exist but first occurrences collide: ambiguous
-
-
-def lcs_batch(a_list, b_list) -> np.ndarray:
-    """LCS lengths for aligned lists of (str | bytes) pairs."""
-    out = np.empty(len(a_list), dtype=np.int64)
-    for t, (a, b) in enumerate(zip(a_list, b_list)):
-        if isinstance(a, str):
-            a = a.encode("utf-8")
-        if isinstance(b, str):
-            b = b.encode("utf-8")
-        out[t] = longest_common_substring(a, b)
-    return out

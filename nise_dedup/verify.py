@@ -129,9 +129,8 @@ def _make_cascade(cfg: DedupConfig):
 
     def grams_of(e, w: int):
         """Memoized sorted-unique w-gram rolling hashes of a participant's
-        normalized bytes + the first-occurrence index of each value —
-        the LCS gram decision (suffix.has_common_substring) recomputed
-        both tables per PAIR, which profiled at 69% of the whole cascade
+        normalized bytes + the first-occurrence index of each value.
+        Building both tables per PAIR profiled at 69% of the whole cascade
         on the 1M corpus's deep residue (round 6); each participant rides
         ~16 pairs there, so the per-(doc, width) memo amortizes them."""
         if len(e) < 3:
@@ -160,10 +159,9 @@ def _make_cascade(cfg: DedupConfig):
             need = int(max(floor,
                            math.ceil(ratio * min(len(ca), len(cb)))))
             if min(len(ca), len(cb)) >= need:
-                # exact O(n) threshold decision, identical to
-                # suffix.has_common_substring evaluated over the memoized
-                # gram tables: a miss in the gram intersection proves
-                # LCS < need; a hit is byte-verified at the same
+                # exact O(n) decision "LCS >= need" over the memoized
+                # need-gram tables: an empty gram intersection proves
+                # LCS < need; a hit is byte-verified at the grams'
                 # first-occurrence positions; unverifiable collisions
                 # (~2^-64) fall back to the exact suffix array.
                 # `passed` never needs the true max — the suffix array

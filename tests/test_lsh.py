@@ -270,12 +270,10 @@ def test_escalation_quiet_when_reps_pass(spark):
 
 
 def test_costed_failed_cum_is_global_prefix_sum(spark):
-    """The escalation budget's running total is now a range-partitioned
-    prefix sum (log2(cost) buckets + per-bucket offsets) instead of one
-    unpartitioned window (round 6). The cum column must still equal the
-    GLOBAL prefix sum of cost in (cost, band_id, band_key, salt_lo,
-    salt_hi) ascending order — ties included — or the budget would admit
-    a different pair set."""
+    """The escalation budget's running total (one unpartitioned window
+    over the failed salt pairs) must equal the GLOBAL prefix sum of cost
+    in (cost, band_id, band_key, salt_lo, salt_hi) ascending order — ties
+    included — or the budget would admit a different pair set."""
     from nise_dedup.lsh import _costed_failed
 
     # 120 buckets split 2 ways; member counts vary 2..14 with many ties,

@@ -159,6 +159,8 @@ def test_single_scan_ingest(spark, tmp_path):
                        collect_metrics=False)
     uplan = res.stages["uniq"]._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in uplan
+    p1 = {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
+          for r in res.clusters.collect()}
     res.release()
 
     ckpt = str(tmp_path / "ck")
@@ -169,8 +171,6 @@ def test_single_scan_ingest(spark, tmp_path):
         plan = res2.stages[name]._jdf.queryExecution().optimizedPlan().toString()
         assert "corpus.parquet" not in plan, name
     # identical outputs across both modes
-    p1 = {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
-          for r in res.clusters.collect()}
     p2 = {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
           for r in res2.clusters.collect()}
     assert p1 == p2
@@ -206,35 +206,75 @@ def test_id_collision_fallback(spark, monkeypatch):
     res.release()
 
 
-def test_gate_laziness_by_consumer_count(spark):
-    """VERDICT r2 serial-term item: in no-ckpt mode, only multi-consumer
-    stages are persisted; single-consumer stages (cand/verified/clusters)
-    fuse into their consumer's job. Metrics mode adds consumers, so there
-    everything is persisted (the r2 behavior)."""
+# every stage after signatures that a no-checkpoint run stores; bucket_cap=2
+# salts the tiny corpus' buckets and fails rep pairs, so wave 2 runs
+STORED = ("cand_pairs", "rep_verify", "esc_pairs", "verified_w1",
+          "verified_w2", "clusters_uniq")
+
+
+def _checkpointed(df) -> bool:
+    """``df`` reads a stored local checkpoint: its plan is one LogicalRDD
+    whose RDD the session still holds."""
+    plan = df._jdf.queryExecution().analyzed()
+    pers = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    return (plan.nodeName() == "LogicalRDD"
+            and pers.containsKey(plan.rdd().id()))
+
+
+def test_post_signature_stages_stored(spark):
+    """Without a checkpoint every stage after signatures is materialized
+    once and passed on with its lineage cut, whatever collect_metrics
+    says: the published verified pairs read only stored rows (no join,
+    no deep mapper left to re-plan), uniq and signatures stay cached, and
+    the content-bearing ingest cache is released."""
     rows = C.generate("tiny", seed=42)
     df = spark.createDataFrame(C.to_pandas(rows))
-    cfg = DedupConfig(shuffle_partitions=8)
+    cfg = DedupConfig(shuffle_partitions=8, bucket_cap=2)
+    for collect_metrics in (False, True):
+        # storageLevel consults the CacheManager by canonicalized PLAN, so
+        # a cached identical plan from an earlier run would read as cached
+        spark.catalog.clearCache()
+        res = run_pipeline(spark, df, cfg, collect_metrics=collect_metrics)
+        for name in STORED:
+            assert _checkpointed(res.stages[name]), (name, collect_metrics)
+        plan = (res.verified_pairs._jdf.queryExecution().optimizedPlan()
+                .toString())
+        assert "Join" not in plan and "MapInPandas" not in plan, plan
+        level = {n: res.stages[n].storageLevel
+                 for n in ("ingest", "uniq", "signatures")}
+        assert level["uniq"].useMemory and level["signatures"].useMemory
+        assert not (level["ingest"].useMemory or level["ingest"].useDisk)
+        res.release()
 
-    # storageLevel consults the CacheManager by canonicalized PLAN, so a
-    # cached identical plan from an earlier test would read as persisted
+
+def test_release_frees_stored_stages(spark):
+    """Repeated runs, each followed by release(), leave the session's
+    storage as they found it: no persistent RDD and no stored byte
+    accumulates. DataFrame.unpersist alone never frees a local
+    checkpoint, so this pins that release() does."""
+    import time
+
+    rows = C.generate("tiny", seed=42)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    cfg = DedupConfig(shuffle_partitions=8, bucket_cap=2)
+    jsc = spark.sparkContext._jsc
+
+    def storage():
+        infos = jsc.sc().getRDDStorageInfo()
+        return (jsc.getPersistentRDDs().size(),
+                sum(i.memSize() + i.diskSize() for i in infos))
+
     spark.catalog.clearCache()
-    res = run_pipeline(spark, df, cfg, collect_metrics=False)
-    persisted = {n: s.storageLevel.useMemory or s.storageLevel.useDisk
-                 for n, s in res.stages.items()}
-    assert persisted["uniq"] and persisted["signatures"]
-    assert not persisted["cand_pairs"]
-    assert not persisted["verified_pairs"]
-    assert not persisted["clusters"]
-    # the content-bearing ingest cache was swapped for the pruned projection
-    assert not (res.stages["ingest"].storageLevel.useMemory
-                or res.stages["ingest"].storageLevel.useDisk)
-    res.release()
-
-    res2 = run_pipeline(spark, df, cfg, collect_metrics=True)
-    p2 = {n: s.storageLevel.useMemory or s.storageLevel.useDisk
-          for n, s in res2.stages.items()}
-    assert p2["cand_pairs"] and p2["verified_pairs"] and p2["clusters_uniq"]
-    res2.release()
+    before = storage()
+    for _ in range(3):
+        res = run_pipeline(spark, df, cfg, collect_metrics=False)
+        res.clusters.count()
+        res.release()
+    # block removal is asynchronous: give it a moment to land
+    deadline = time.time() + 30
+    while storage() != before and time.time() < deadline:
+        time.sleep(0.5)
+    assert storage() == before
 
 
 def test_id_collision_fallback_ckpt(spark, monkeypatch, tmp_path):
