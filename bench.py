@@ -35,8 +35,8 @@ def _build(cpus: int):
     from nise_dedup.session import build_session
     cfg = DedupConfig(shuffle_partitions=max(2 * cpus, 16))
     # $NISE_CFG_OVERRIDES: JSON dict of DedupConfig field overrides — the
-    # forced-formulation lever for A/B runs (e.g. co-shuffle in its own
-    # regime, VERDICT r4 next #3: '{"deep_coshuffle_pairs": 1}')
+    # config lever for A/B runs without a code fork
+    # (e.g. '{"shuffle_partitions": 32}')
     ov = os.environ.get("NISE_CFG_OVERRIDES")
     if ov:
         import dataclasses

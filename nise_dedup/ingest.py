@@ -141,7 +141,7 @@ def uniq_with_content(hashed: DataFrame,
     (~400 MB at the 200k bench corpus — the dominant flat term inside the
     signature-fill barrier on this one-disk box, barrier-attributed in
     BENCH/BASELINE.md r5). Above broadcast size the join degrades to a
-    co-shuffle on the composite key — content moves once, exactly what
+    shuffled join on the composite key — content moves once, exactly what
     the old aggregate paid, so the 100-TB plan is never worse.
 
     Output is row-identical to the aggregate formulation: file_id is the

@@ -45,7 +45,7 @@ def disable() -> list:
 def note(name: str, value) -> None:
     """Attach a scalar fact (a count, a chosen branch) to the log — shows
     up as a zero-duration row so run comparisons can see WHY a plan
-    diverged (e.g. the deep-residue count behind a formulation choice)."""
+    diverged (e.g. the deep-residue count behind the deep-stage width)."""
     if LOG is None:
         return
     LOG.append({"name": name, "t0": round(time.time() - _T_ENABLE, 3),

@@ -32,7 +32,8 @@ def partition_lineage(df: DataFrame) -> list[dict]:
     """Per-partition row counts (lineage contract, BASELINE.json).
 
     spark_partition_id is evaluated at WRITE layout time; rows land in the
-    manifest, not in a shuffled side table, so this adds one cheap agg."""
+    manifest, not in a shuffled side table. Their sum is the stage's row
+    count, so a stage write runs this one agg and no separate count."""
     rows = (df.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows_out"))
             .collect())
@@ -60,13 +61,18 @@ def write_stage(df: DataFrame, stage: str, ckpt: str, config_hash: str,
     w.parquet(data)
     spark = df.sparkSession
     written = spark.read.parquet(data)
+    if lineage:
+        parts = partition_lineage(written)
+        rows = sum(p["rows_out"] for p in parts)
+    else:
+        parts, rows = [], written.count()
     manifest = {
         "stage": stage,
         "config_hash": config_hash,
-        "rows": written.count(),
+        "rows": rows,
         "schema": written.schema.jsonValue(),
         "wall_s": round(time.time() - t0, 3),
-        "partitions": partition_lineage(written) if lineage else [],
+        "partitions": parts,
         "completed_at_epoch": int(time.time()),
         **(extra_manifest or {}),
     }
@@ -251,13 +257,14 @@ def run_stage_buckets(spark: SparkSession, ckpt: str, config_hash: str,
         spark.sparkContext.setJobGroup("", "")
 
     written = spark.read.parquet(data)
+    parts = partition_lineage(written)
     manifest = {
         "stage": stage,
         "config_hash": config_hash,
-        "rows": written.count(),
+        "rows": sum(p["rows_out"] for p in parts),
         "schema": written.schema.jsonValue(),
         "wall_s": round(time.time() - t0, 3),
-        "partitions": partition_lineage(written),
+        "partitions": parts,
         "n_buckets": n_buckets,
         "completed_at_epoch": int(time.time()),
         **(extra_manifest or {}),

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from nise_dedup.config import DedupConfig
 from nise_dedup.instrument import barrier
+from nise_dedup.session import spread_width
 
 
 def explode_bands(signatures: DataFrame) -> DataFrame:
@@ -78,13 +79,11 @@ def salted_buckets(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
               .withColumn("salt",
                           F.pmod(F.xxhash64("file_id"),
                                  F.col("nsplits")).cast("int")))
-    # width = one task per core (floor 16), same rule as the pipeline's
-    # ingest spread (round 6): this repartition feeds the salted CACHE the
-    # self-join co-partitions on, so its width sets the task count of
-    # every downstream pair stage; per-key load stays bounded by the
-    # salting itself, not the partition count
-    width = min(cfg.shuffle_partitions,
-                max(bands.sparkSession.sparkContext.defaultParallelism, 16))
+    # this repartition feeds the salted CACHE the self-join co-partitions
+    # on, so its width sets the task count of every downstream pair stage;
+    # per-key load stays bounded by the salting itself, not the width
+    width = spread_width(cfg.shuffle_partitions,
+                         bands.sparkSession.sparkContext.defaultParallelism)
     return salted.repartition(width, "band_id", "band_key", "salt")
 
 

@@ -39,6 +39,7 @@ from nise_dedup.instrument import barrier
 from nise_dedup.config import DedupConfig
 from nise_dedup.io import (read_stage, run_stage, run_stage_buckets,
                            write_stage)
+from nise_dedup.session import spread_width
 from nise_dedup.signatures import compute_signatures
 
 FILES_COLS = ["file_id", "repo", "path", "commit", "lang",
@@ -119,19 +120,13 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     def _ingest():
         df = ingest.basic_filters(corpus, cfg)
         df = ingest.with_sha(ingest.with_file_id(df))
-        # spread width = one task per core (floor 16), not the shuffle
-        # width (round 6): the repartition exists to parallelize the
-        # CPU-heavy signature pass, whose round-robin rows are uniform —
-        # one wave of core-count tasks does the same compute as two waves
-        # of 2x-core tasks with half the per-task overhead, and every
-        # downstream scan of the ingest/uniq/signature caches inherits the
-        # narrower partitioning (A/B at sf1.0: warm pipeline wall 12-13s
-        # -> 8-12s). Capped by shuffle_partitions so explicit small-run
-        # configs keep their layout.
-        spread = min(cfg.shuffle_partitions,
-                     max(spark.sparkContext.defaultParallelism, 16))
+        # the repartition exists to parallelize the CPU-heavy signature
+        # pass, whose round-robin rows are uniform; every downstream scan
+        # of the ingest/uniq/signature caches inherits this width
         return ensure_min_partitions(
-            df.select(*FILES_COLS, "content"), spread)
+            df.select(*FILES_COLS, "content"),
+            spread_width(cfg.shuffle_partitions,
+                         spark.sparkContext.defaultParallelism))
     # F2 uniqueness enforcement: an exact (count, countDistinct) agg over
     # the pruned `files` projection. An approx_count_distinct pre-gate is
     # statistically useless for this check (the expected ~2.7e4 collisions
@@ -302,12 +297,11 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             stage_caches.append(salted)
             if salted.where(F.col("nsplits") > 1).limit(1).count() == 0:
                 return None
-        # small bounded call: no meta-agg barrier, forced joined deep plan
+        # small bounded call: no meta-agg barrier
         # (rep pairs ~ rep_k^2 per salted sub-bucket pair)
         rep_verd = store("rep_verify", verify.verify_pairs(
             lsh.cross_rep_pairs(salted, cfg.rep_k), signatures, uniq, cfg,
-            handles=verify_internals, eager_meta=False,
-            formulation="joined"))
+            handles=verify_internals, eager_meta=False))
         esc = store("esc_pairs",
                     lsh.escalation_pairs(salted, rep_verd, cfg)
                     .join(cand.select("a", "b"), on=["a", "b"],
@@ -318,11 +312,10 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
 
     def _wave2(esc):
         """Wave 2: the escalated pairs through the same cascade. Bounded by
-        escalate_max_members — small: no meta barrier, the joined deep
-        plan, and the escalation deep budget."""
+        escalate_max_members — small: no meta barrier, and the escalation
+        deep budget."""
         v2 = verify.verify_pairs(esc, signatures, uniq, cfg,
-                                 handles=verify_internals,
-                                 eager_meta=False, formulation="joined",
+                                 handles=verify_internals, eager_meta=False,
                                  deep_budget=cfg.escalate_deep_budget)
         return v2 if ckpt else store("verified_w2", v2)
 

@@ -39,6 +39,15 @@ def default_driver_memory(meminfo: str = "/proc/meminfo",
     return f"{max(512, total // 2 // 2**20)}m"
 
 
+def spread_width(shuffle_partitions: int, parallelism: int) -> int:
+    """Width of the spread repartitions (ingest and salted buckets): one
+    task per core with a floor of 16, capped by ``shuffle_partitions`` so
+    explicit small-run configs keep their layout. One wave of core-count
+    tasks does the compute of two waves of 2x-core tasks with half the
+    per-task overhead (A/B at sf1.0: warm pipeline wall 12-13 s -> 8-12 s)."""
+    return min(shuffle_partitions, max(parallelism, 16))
+
+
 def build_session(master: str | None = None,
                   cfg: DedupConfig | None = None,
                   app_name: str = "nise-dedup") -> SparkSession:

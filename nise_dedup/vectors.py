@@ -225,9 +225,11 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     # goes on the SLIM pair table BEFORE the vector attach (guide §2.3 —
     # shuffle keys, not payloads): repartitioning after the joins moved
     # ~0.5 KB of attached vectors per pair through the exchange when 16
-    # bytes of ids fix the same stage width; the attach joins preserve the
-    # pair-side partitioning in both the broadcast and the shuffled-hash
-    # regime, so the GEMM stage still runs at this width.
+    # bytes of ids fix the same stage width. The pin holds in the
+    # broadcast regime, where the attach joins keep the pair side's
+    # partitioning; in the shuffled-hash regime the second attach join
+    # re-shuffles the pair side on `b`, so the GEMM stage runs at that
+    # join's width instead.
     pairs = pairs.repartition(
         2 * pairs.sparkSession.sparkContext.defaultParallelism, F.col("a"))
     vecs = embeddings.select(F.col(id_col).alias("vec_id"),

@@ -65,50 +65,6 @@ def test_tiny_salted_parity(spark):
     assert pp <= op
 
 
-def test_deep_formulations_identical(spark):
-    """Round 4: the adaptive deep-verify switch must be invisible in the
-    output — force the co-shuffle formulation (threshold 0) and compare
-    against the joined formulation (threshold huge) pair for pair."""
-    cfg_join = DedupConfig(shuffle_partitions=8,
-                           deep_coshuffle_pairs=10**12)
-    cfg_cosh = DedupConfig(shuffle_partitions=8, deep_coshuffle_pairs=0,
-                           deep_coshuffle_fanout=0.0)
-    rows = C.generate("tiny", seed=42)
-    df = spark.createDataFrame(C.to_pandas(rows))
-    outs = []
-    for cfg in (cfg_join, cfg_cosh):
-        res = run_pipeline(spark, df, cfg, collect_metrics=False)
-        outs.append({
-            "clusters": {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
-                         for r in res.clusters.collect()},
-            "verified": sorted(map(tuple, res.verified_pairs.collect()))})
-        res.release()
-    assert outs[0]["verified"] == outs[1]["verified"]
-    assert outs[0]["clusters"] == outs[1]["clusters"]
-
-
-def test_choose_joined_fanout_switch():
-    """Round 5 (VERDICT r4 next #3): co-shuffle requires BOTH an
-    over-floor (unbroadcastable) residue AND a high content-duplication
-    fanout. The thresholds must keep picking the calibrated sides: joined
-    at the round-4 616k-pair broadcastable point (measured 10-20% faster),
-    co-shuffle at the round-5 5.8M-pair/719k-participant point — fanout
-    16.2, the measured local crossover, where a real cluster's network
-    shuffle tips the choice to co-shuffle (verify.choose_joined)."""
-    from nise_dedup.verify import choose_joined
-    cfg = DedupConfig()
-    # the round-4 measured point: 616k pairs, broadcast-sized -> joined
-    assert choose_joined(616_128, 150_000, cfg)
-    # the round-5 measured point: over-floor AND fanout 16.2 -> co-shuffle
-    assert not choose_joined(5_822_439, 719_010, cfg)
-    # over-floor but dup-sparse (fanout 5): joined keeps the non-blocking
-    # plan — its byte duplication is near the once-per-participant floor
-    assert choose_joined(10_000_000, 4_000_000, cfg)
-    # forcing knobs used by tests/the A/B script still force
-    forced = DedupConfig(deep_coshuffle_pairs=0, deep_coshuffle_fanout=0.0)
-    assert not choose_joined(1, 1, forced)
-
-
 def test_tiny_permutation_invariance(spark):
     cfg = DedupConfig(shuffle_partitions=8)
     rows = C.generate("tiny", seed=42)

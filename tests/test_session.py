@@ -1,7 +1,7 @@
 """Pure-Python tests (no Spark session) of the session's driver-memory
-default."""
+default and the spread-width rule."""
 
-from nise_dedup.session import default_driver_memory
+from nise_dedup.session import default_driver_memory, spread_width
 
 GIB = 2**30
 
@@ -40,3 +40,12 @@ def test_smaller_cgroup_limit_wins(tmp_path):
 def test_floor_on_tiny_machines(tmp_path):
     assert default_driver_memory(_meminfo(tmp_path, 256 * 2**20), ()) \
         == "512m"
+
+
+def test_spread_width_per_core_count():
+    # one task per core, floor 16, capped by shuffle_partitions
+    assert spread_width(64, 4) == 16
+    assert spread_width(64, 8) == 16
+    assert spread_width(64, 32) == 32
+    assert spread_width(8, 4) == 8
+    assert spread_width(16, 32) == 16

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nise_dedup.config import DedupConfig
@@ -108,23 +109,21 @@ def test_lcs_threshold_boundary_parity():
     LCS is int(ratio*min_len) but below the float value must NOT pass."""
     import pandas as pd
 
-    from nise_dedup.verify import _deep_mapper
+    from nise_dedup.verify import _deep_mapper_joined
 
     cfg = DedupConfig(normalize="none")
     # min_len = 1024 -> ratio*min_len = 614.4 (fractional on purpose)
     a614, b614 = "c" * 614 + "a" * 410, "c" * 614 + "b" * 410
     a615, b615 = "c" * 615 + "a" * 409, "c" * 615 + "b" * 409
-    # co-shuffle stream shape: tag=0 content rows precede tag=1 pair rows
-    # within a bucket (pid); est 0.40 puts the pairs in the LCS band —
+    # content-joined pair rows; est 0.40 puts the pairs in the LCS band —
     # >= tau_lcs_gate (0.35), < est_exact_gate (0.45)
     pdf = pd.DataFrame({
-        "pid": [0, 0, 0, 0, 0, 0],
-        "tag": [0, 0, 0, 0, 1, 1],
-        "a": [1, 2, 3, 4, 1, 3],
-        "b": [0, 0, 0, 0, 2, 4],
-        "est": [0.0, 0.0, 0.0, 0.0, 0.40, 0.40],
-        "content": [a614, b614, a615, b615, None, None]})
-    out = pd.concat(list(_deep_mapper(cfg)(iter([pdf]))))
+        "a": [1, 3],
+        "b": [2, 4],
+        "est": [0.40, 0.40],
+        "content_a": [a614, a615],
+        "content_b": [b614, b615]})
+    out = pd.concat(list(_deep_mapper_joined(cfg)(iter([pdf]))))
     got = dict(zip(out["a"], out["deep_pass"]))
     # oracle formula: lcs_len >= max(floor, ratio * min_len) as floats
     assert bool(got[1]) is (614 >= max(cfg.tau_lcs_min_bytes,
@@ -132,6 +131,13 @@ def test_lcs_threshold_boundary_parity():
     assert bool(got[3]) is (615 >= max(cfg.tau_lcs_min_bytes,
                                        cfg.tau_lcs_ratio * 1024))  # True
     assert not got[1] and got[3]
+
+
+def test_unknown_formulation_rejected():
+    """The joined plan is the only deep-verify plan; naming any other one
+    fails before a Spark plan is built."""
+    with pytest.raises(ValueError, match="formulation"):
+        verify_pairs(None, None, None, DedupConfig(), formulation="auto")
 
 
 def test_deep_budget_caps_deep_stage_est_descending(spark):
