@@ -43,16 +43,6 @@ def with_file_id(df: DataFrame) -> DataFrame:
     return df.withColumn("file_id", F.xxhash64("repo", "path", "commit"))
 
 
-def assert_unique_ids(df: DataFrame) -> None:
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("file_id").alias("d"),
-    ).first()
-    if row["n"] != row["d"]:
-        raise RuntimeError(
-            f"file_id collision: {row['n']} rows, {row['d']} distinct ids")
-
-
 def resolve_id_collisions(df: DataFrame, max_rounds: int = 3) -> DataFrame:
     """F2 collision fallback: rows whose 64-bit id collides are re-keyed
     with xxhash64(repo, path, commit, salt) — deterministic (depends only
@@ -125,10 +115,10 @@ def collapse_exact(files: DataFrame) -> DataFrame:
                  F.count("*").alias("n_copies")))
 
 
-def uniq_with_content(hashed: DataFrame,
-                      winners: DataFrame | None = None) -> DataFrame:
-    """The `uniq` relation (SURVEY §1.2): canonical rows with content,
-    ready for the signature stage.
+def uniq_with_content(hashed: DataFrame) -> DataFrame:
+    """The `uniq` relation (SURVEY §1.2): one canonical row per distinct
+    content, with content, ready for the signature stage. Its file_id is
+    the minimum per sha, so ``uniq`` is also the sha -> canonical map.
 
     WINNERS-JOIN formulation (round 5): the canonical representative per
     sha is a metadata-only hash aggregate (sha, min file_id) — map-side
@@ -149,33 +139,21 @@ def uniq_with_content(hashed: DataFrame,
     sha group. NOTE the plan references ``hashed`` twice (winner agg +
     content filter) — callers must hand in a persisted/checkpointed
     relation (the pipeline always does) or the source scans twice.
-
-    ``winners`` (round 6): the caller may hand in the (content_sha256,
-    file_id=min per sha) table — e.g. to persist it once and share it with
-    the publish stage (``expand_exact``) so the metadata aggregate is not
-    recomputed per consumer.
     """
-    if winners is None:
-        winners = compute_winners(hashed)
+    winners = (hashed.groupBy("content_sha256")
+               .agg(F.min("file_id").alias("file_id")))
     return (hashed.join(winners, on=["content_sha256", "file_id"])
             .select("file_id", "content_sha256", "content", "n_bytes"))
-
-
-def compute_winners(hashed: DataFrame) -> DataFrame:
-    """The canonical-representative table: (content_sha256, file_id) with
-    file_id = min file_id per sha — a metadata-only hash aggregate."""
-    return (hashed
-            .groupBy("content_sha256")
-            .agg(F.min("file_id").alias("file_id")))
 
 
 def expand_exact(clusters_uniq: DataFrame, files: DataFrame,
                  winners: DataFrame | None = None) -> DataFrame:
     """Inverse of R3: propagate each canonical file's cluster_id to every
     exact-duplicate row, via the sha->canonical map. Output has one row per
-    ORIGINAL input row. ``winners`` (round 6): reuse the already-computed
-    (and typically cached) sha->canonical table instead of re-aggregating
-    ``files`` — one metadata shuffle saved per publish."""
+    ORIGINAL input row. ``winners``: an already-stored (content_sha256,
+    file_id = min per sha) table — the pipeline hands in ``uniq`` — used
+    instead of re-aggregating ``files``, which saves one metadata shuffle
+    per publish."""
     base = winners if winners is not None else collapse_exact(files)
     sha_to_canon = base.select(
         "content_sha256", F.col("file_id").alias("canon_id"))

@@ -119,7 +119,10 @@ def run_stage(spark: SparkSession, ckpt: str, config_hash: str, stage: str,
     Callers pin the layout via ``extra_manifest`` on write and the same
     dict via ``require_manifest`` on resume; a mismatch — including a
     manifest written before the key existed — recomputes, exactly like a
-    config-hash mismatch."""
+    config-hash mismatch. The pipeline pins ``uniq_buckets``,
+    ``sig_buckets`` and ``w1_buckets`` (wave-1 verified pairs; an older
+    flat ``verified_pairs`` stage held both verify waves under
+    ``vp_buckets`` and so must not be reused as wave 1)."""
     if ckpt and stage_complete(ckpt, stage, config_hash):
         try:
             m = read_manifest(ckpt, stage)

@@ -39,6 +39,10 @@ from nise_dedup.instrument import barrier
 DEEP_PARTITION_FACTOR = 4
 DEEP_PAIRS_PER_TASK = 512
 
+# verify_pairs' output columns and types (an empty wave is built from it)
+VERIFIED_SCHEMA = ("a long, b long, est double, jaccard double, hamming int, "
+                   "lcs_len long, passed boolean")
+
 def jaccard_expr(sh_a, sh_b):
     """V1 — exact set Jaccard over array columns, JVM-side (used by oracle
     queries and tests; the pipeline's exact-J runs in the deep mapper)."""
@@ -286,8 +290,7 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
                  eager_meta: bool = True,
                  formulation: str = "joined",
                  deep_budget: int = 0) -> DataFrame:
-    """V4 — cascade (see DedupConfig). Returns
-    DF[a, b, est, jaccard, hamming, lcs_len, passed];
+    """V4 — cascade (see DedupConfig). Returns DF[VERIFIED_SCHEMA];
     jaccard/lcs_len = -1 where the cascade never computed them.
 
     ``signatures`` must carry (file_id, simhash, minhash, n_bytes);

@@ -162,19 +162,23 @@ def test_id_collision_fallback(spark, monkeypatch):
     res.release()
 
 
-# every stage after signatures that a no-checkpoint run stores; bucket_cap=2
-# salts the tiny corpus' buckets and fails rep pairs, so wave 2 runs
-STORED = ("cand_pairs", "rep_verify", "esc_pairs", "verified_w1",
-          "verified_w2", "clusters_uniq")
+# every stage after signatures that a no-checkpoint run stores apart from
+# wave 1, which is reached through the published union; bucket_cap=2 salts
+# the tiny corpus' buckets and fails rep pairs, so wave 2 runs
+STORED = ("cand_pairs", "rep_verify", "esc_pairs", "verified_pairs_esc",
+          "clusters_uniq")
+
+
+def _stored_plan(plan, spark) -> bool:
+    """``plan`` is one LogicalRDD whose RDD the session still holds."""
+    pers = spark.sparkContext._jsc.getPersistentRDDs()
+    return (plan.nodeName() == "LogicalRDD"
+            and pers.containsKey(plan.rdd().id()))
 
 
 def _checkpointed(df) -> bool:
-    """``df`` reads a stored local checkpoint: its plan is one LogicalRDD
-    whose RDD the session still holds."""
-    plan = df._jdf.queryExecution().analyzed()
-    pers = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    return (plan.nodeName() == "LogicalRDD"
-            and pers.containsKey(plan.rdd().id()))
+    """``df`` reads a stored local checkpoint."""
+    return _stored_plan(df._jdf.queryExecution().analyzed(), df.sparkSession)
 
 
 def test_post_signature_stages_stored(spark):
@@ -196,6 +200,16 @@ def test_post_signature_stages_stored(spark):
         plan = (res.verified_pairs._jdf.queryExecution().optimizedPlan()
                 .toString())
         assert "Join" not in plan and "MapInPandas" not in plan, plan
+        # the published pairs are the union of the two stored waves
+        leaves = res.verified_pairs._jdf.queryExecution().analyzed() \
+            .collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        assert len(leaves) == 2, leaves
+        assert all(_stored_plan(p, spark) for p in leaves)
+        esc_rdd = (res.stages["verified_pairs_esc"]._jdf.queryExecution()
+                   .analyzed().rdd().id())
+        assert sorted(p.rdd().id() == esc_rdd for p in leaves) == \
+            [False, True]
         level = {n: res.stages[n].storageLevel
                  for n in ("ingest", "uniq", "signatures")}
         assert level["uniq"].useMemory and level["signatures"].useMemory

@@ -337,3 +337,69 @@ def test_bucket_journal_detects_corrupted_slice(spark, tmp_path):
     out2 = run_stage_buckets(spark, ckpt, "h1", "s", 4, fn)
     assert log == [1]                  # ONLY the corrupted bucket recomputed
     assert sorted(map(tuple, out2.collect())) == want
+
+
+def _pairs(res):
+    return [(r["a"], r["b"], r["passed"])
+            for r in res.verified_pairs.collect()]
+
+
+def test_mode_parity_with_escalation(spark, tmp_path):
+    """With wave 2 active (bucket_cap=2 salts the tiny corpus' buckets and
+    fails rep pairs; at seed 2 wave 2 verifies two pairs), a run without a checkpoint, with a flat checkpoint
+    and with incremental_buckets=3 verify the same pairs, each once, and
+    give the same clusters; both checkpoint layouts store each verify wave
+    as its own stage."""
+    rows = C.generate("tiny", seed=2)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    flat = DedupConfig(shuffle_partitions=8, bucket_cap=2)
+    inc = DedupConfig(shuffle_partitions=8, bucket_cap=2,
+                      incremental_buckets=3)
+    out = {}
+    for mode, cfg, ckpt in (("stored", flat, ""),
+                            ("flat", flat, str(tmp_path / "flat")),
+                            ("bucketed", inc, str(tmp_path / "inc"))):
+        res = run_pipeline(spark, df, cfg, ckpt=ckpt, collect_metrics=False)
+        pairs = _pairs(res)
+        assert len({p[:2] for p in pairs}) == len(pairs), mode
+        assert res.stages["verified_pairs_esc"].count() > 0, mode
+        out[mode] = (set(pairs), _clusters(res))
+        for s in ("verified_pairs", "verified_pairs_esc"):
+            assert not ckpt or stage_complete(ckpt, s, cfg.config_hash()), \
+                (mode, s)
+        res.release()
+    assert out["stored"] == out["flat"] == out["bucketed"]
+
+
+def test_flat_two_wave_verified_pairs_recomputes(spark, tmp_path,
+                                                 monkeypatch):
+    """A flat verified_pairs checkpoint that holds BOTH verify waves under
+    the manifest pin vp_buckets: 0 (the layout from before wave 2 became
+    its own stage) is not reused as wave 1: wave 1 recomputes, wave 2
+    comes from its own stage, and no pair is counted twice."""
+    from nise_dedup import verify as V
+    from nise_dedup.io import write_stage
+
+    rows = C.generate("tiny", seed=2)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    cfg = DedupConfig(shuffle_partitions=8, bucket_cap=2)
+    ckpt = str(tmp_path / "ck")
+    res = run_pipeline(spark, df, cfg, ckpt=ckpt, collect_metrics=False)
+    want = _clusters(res)
+    both = res.verified_pairs.collect()
+    assert res.stages["verified_pairs_esc"].count() > 0
+    write_stage(spark.createDataFrame(both, res.verified_pairs.schema),
+                "verified_pairs", ckpt, cfg.config_hash(),
+                extra_manifest={"vp_buckets": 0})
+    assert "w1_buckets" not in read_manifest(ckpt, "verified_pairs")
+
+    real = V.verify_pairs
+    calls: list[int] = []
+    monkeypatch.setattr(
+        V, "verify_pairs",
+        lambda *a, **k: (calls.append(1), real(*a, **k))[1])
+    res2 = run_pipeline(spark, df, cfg, ckpt=ckpt, collect_metrics=False)
+    assert calls == [1]                     # wave 1 only; wave 2 reused
+    pairs = _pairs(res2)
+    assert len({p[:2] for p in pairs}) == len(pairs) == len(both)
+    assert _clusters(res2) == want
