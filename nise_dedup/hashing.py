@@ -10,9 +10,7 @@ which is what makes "identical shingle/band/row signature configuration"
 (BASELINE.json) meaningful.
 
 Hash family: splitmix64 finalizer (Steele et al., public domain) — a strong
-64-bit mixer; per-permutation MinHash hashes are ``mix64(shingle ^ seed_i)``.
-Shingle hashes are a degree-(k-1) polynomial over bytes in base B, finalized
-with mix64 (standard Rabin-Karp style rolling family).
+64-bit mixer over a Rabin-Karp style byte polynomial (``window_hashes``).
 """
 
 from __future__ import annotations
@@ -77,38 +75,44 @@ def _powers(n: int):
     return _pow_cache, _ipow_cache
 
 
-def shingle_hashes(content: bytes, k: int) -> np.ndarray:
-    """Sorted distinct 64-bit hashes of the char k-grams of ``content``.
+def window_hashes(b: np.ndarray, w: int) -> np.ndarray:
+    """Polynomial hash sum_j b[i+j] * B^j (mod 2^64) of every w-window of
+    the uint8 array ``b`` (w <= b.size): the shingle sets (w = k) and the
+    deep cascade's LCS grams (w = the needed match length).
 
-    Window value is the position-independent polynomial
-    sum_j byte[i+j] * B^j (mod 2^64), finalized with mix64 — computed for
-    ALL windows in O(m) via prefix sums Q[i] = sum_{j<i} byte[j] * B^j and
-    H(i) = (Q[i+k] - Q[i]) * B^-i (B odd, so invertible mod 2^64). No
-    m-by-k window matrix: memory traffic is linear in the document size.
-
-    A document shorter than k yields ONE shingle: the hash of the whole
-    byte string (so short files still get signatures; the DuckDB oracle
-    mirrors this as ``case when length(text) < k then 1 ...``).
+    O(m) via prefix sums Q[i] = sum_{j<i} b[j] * B^j and
+    H(i) = (Q[i+w] - Q[i]) * B^-i (B odd, so invertible mod 2^64): no
+    m-by-w window matrix, memory traffic linear in the array size.
     """
-    b = np.frombuffer(content, dtype=np.uint8)
-    if b.size == 0:
-        b = np.zeros(1, dtype=np.uint8)
     n = b.size
-    w = min(k, n)
     pw, ipw = _powers(n)
     q = np.empty(n + 1, dtype=U64)
     q[0] = 0
     np.cumsum(b.astype(U64) * pw[:n], out=q[1:], dtype=U64)
-    h = (q[w:] - q[: n - w + 1]) * ipw[: n - w + 1]
-    return np.unique(mix64(h))
+    return (q[w:] - q[: n - w + 1]) * ipw[: n - w + 1]
+
+
+def shingle_hashes(content: bytes, k: int) -> np.ndarray:
+    """Sorted distinct 64-bit hashes of the char k-grams of ``content``:
+    ``window_hashes`` at w = k, finalized with mix64.
+
+    A document shorter than k yields ONE shingle: the hash of the whole
+    byte string (so short files still get signatures; the DuckDB oracle
+    mirrors this as ``case when length(text) < k then 1 ...``). An empty
+    document is one zero byte.
+    """
+    b = np.frombuffer(content, dtype=np.uint8)
+    if b.size == 0:
+        b = np.zeros(1, dtype=np.uint8)
+    return np.unique(mix64(window_hashes(b, min(k, b.size))))
 
 
 def minhash(shingles: np.ndarray, seeds: np.ndarray,
             chunk: int = 1 << 15) -> np.ndarray:
     """Classic k-permutation MinHash: min_i over shingles of
-    mix64(x ^ seed_i). O(m·n) — kept for reference/tests; the pipeline uses
-    ``minhash_oph`` (O(m)) by default (DedupConfig.minhash_scheme).
-    Returns uint64[n_perm].
+    mix64(x ^ seed_i). O(m·n) — the ``minhash_scheme="kperm"`` path; the
+    pipeline uses ``minhash_oph_batch`` (O(m)) by default. Returns
+    uint64[n_perm].
     """
     n = seeds.shape[0]
     out = np.full(n, np.iinfo(np.uint64).max, dtype=U64)
@@ -119,183 +123,20 @@ def minhash(shingles: np.ndarray, seeds: np.ndarray,
     return out
 
 
-def minhash_oph(shingles: np.ndarray, n: int, seed: int) -> np.ndarray:
-    """One-permutation MinHash (Li/Owen/Zhang '12) with circular
-    densification (Shrivastava/Li '14): ONE O(m) hash pass — each shingle
-    hash is rehashed once, assigned to bin h mod n, and each bin keeps its
-    minimum; empty bins borrow the value of the nearest non-empty bin to
-    the right (circular), remixed with the borrow distance so different
-    sparsity patterns don't fake agreement.
-
-    125x less arithmetic than classic MinHash at n=125, with the same
-    collision property E[bin_a == bin_b] ~= Jaccard. Returns uint64[n].
-    """
-    h = mix64(shingles ^ U64(seed & 0xFFFFFFFFFFFFFFFF) ^ _GOLDEN)
-    bins = (h % U64(n)).astype(np.int64)
-    vals = np.full(n, np.iinfo(np.uint64).max, dtype=U64)
-    np.minimum.at(vals, bins, h)
-    empty = vals == np.iinfo(np.uint64).max
-    # remix the filled minima: raw minima satisfy value % n == bin, so their
-    # low bits are bin-determined and IDENTICAL across documents — b-bit
-    # sketches over them would always agree. mix64 is a bijection, so
-    # equality semantics (same minimum element <=> equal value) survive.
-    vals[~empty] = mix64(vals[~empty])
-    if empty.any():
-        if empty.all():  # cannot happen (>=1 shingle) but stay total
-            return mix64(np.arange(n, dtype=U64) + U64(seed & 0xFFFF))
-        # distance to nearest non-empty bin on the right, circularly:
-        # iterate doubling over a "next filled" pointer (n<=few hundred,
-        # so a simple roll loop is fine and fully vectorized per step)
-        out = vals.copy()
-        dist = np.zeros(n, dtype=np.int64)
-        src = vals.copy()
-        remaining = empty.copy()
-        shift = 1
-        while remaining.any():
-            rolled = np.roll(src, -shift)
-            take = remaining & (rolled != np.iinfo(np.uint64).max)
-            off = U64((shift * int(_GOLDEN)) & 0xFFFFFFFFFFFFFFFF)
-            out[take] = mix64(rolled[take] ^ off)
-            remaining &= ~take
-            shift += 1
-        vals = out
-    return vals
-
-
-def simhash64(shingles: np.ndarray, chunk: int = 1 << 18) -> int:
-    """Charikar 64-bit SimHash over the (unweighted) shingle hash set.
-
-    Bit j of the fingerprint is 1 iff sum over features of (2*bit_j - 1) > 0.
-    Bit-plane sums come from one ``np.unpackbits`` pass (little-endian bit
-    order matches bit j == (x >> j) & 1). Returns a Python int in [0, 2^64).
-    """
-    acc = np.zeros(64, dtype=np.int64)
-    m = 0
-    for lo in range(0, shingles.shape[0], chunk):
-        x = np.ascontiguousarray(shingles[lo:lo + chunk])
-        bits = np.unpackbits(x.view(np.uint8).reshape(-1, 8),
-                             axis=1, bitorder="little")
-        acc += bits.sum(axis=0, dtype=np.int64)
-        m += x.shape[0]
-    signs = (2 * acc - m) > 0          # sum(2b-1) = 2*sum(b) - m
-    fp = np.uint64(0)
-    if signs.any():
-        fp = (signs.astype(np.uint64)
-              << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64)
-    return int(fp)
-
-
-def band_keys(sig: np.ndarray, bands: int, rows: int, seed: int) -> np.ndarray:
-    """LSH band keys: fold each length-r signature slice with mix64.
-
-    key_b starts at a per-band seed and absorbs each of the band's r
-    signature values: key = mix64(key ^ v). Returns uint64[bands].
-    """
-    sig2 = sig.reshape(bands, rows)
-    keys = hash_seeds(bands, seed ^ 0x5CA1AB1E)
-    for j in range(rows):
-        keys = mix64(keys ^ sig2[:, j])
-    return keys
-
-
-def pack_bbit(mh: np.ndarray, m: int) -> tuple[int, int]:
-    """b-bit MinHash sketch (b=2, Li & Koenig '10): the low 2 bits of the
-    first m (<=64) minhash values packed into two int64 words — slot i
-    occupies bits [2i, 2i+1] of word i//32. Unused slots are zero (callers
-    mask them out of comparisons). Returns (lo, hi) as signed ints."""
-    m = min(m, 64, mh.shape[0])
-    bb = (mh[:m] & U64(3)).astype(np.uint64)
-    lo = hi = np.uint64(0)
-    n_lo = min(m, 32)
-    if n_lo:
-        lo = (bb[:n_lo] << (U64(2) * np.arange(n_lo, dtype=U64))).sum(
-            dtype=U64)
-    if m > 32:
-        hi = (bb[32:m] << (U64(2) * np.arange(m - 32, dtype=U64))).sum(
-            dtype=U64)
-    return int(np.int64(lo.astype(np.int64))), int(np.int64(hi.astype(np.int64)))
-
-
-def to_i64(x: np.ndarray | int):
-    """Reinterpret uint64 as signed int64 (Spark LongType is signed)."""
-    if isinstance(x, np.ndarray):
-        return x.view(np.int64) if x.dtype == U64 else x.astype(np.int64)
-    return int(np.uint64(x).astype(np.int64))
-
-
-# --------------------------------------------------------------------------
-# Batch kernels (round 6): the same formulas as the per-document functions
-# above, vectorized ACROSS the documents of one Arrow batch. The signature
-# stage previously paid ~40 small numpy calls per document (~1.9 ms/doc
-# measured at the sf1.0 bench — 95 core-seconds for 50k documents, the
-# single largest real-compute block in the pipeline); these kernels do one
-# numpy pass per batch instead. Bit-identical to the scalar path by
-# construction (same arithmetic, same order); tests/test_hashing.py and
-# tests/test_signatures.py assert parity against the frozen oracle.
-# --------------------------------------------------------------------------
+# Batch kernels: each formula runs over all documents of one Arrow batch,
+# held as (values, starts) — every document's sorted unique shingle hashes
+# concatenated, document d's set at values[starts[d]:starts[d+1]] — or as a
+# uint64[(n_docs, n)] matrix: one numpy pass per batch instead of ~40 small
+# calls per document (1.9 ms/doc at sf1.0).
 
 def shingle_sets_batch(raws: list[bytes], k: int) -> tuple[np.ndarray,
                                                            np.ndarray]:
-    """Per-document sorted-distinct shingle hash sets for a whole batch.
-
-    Returns (values, starts): ``values`` is the concatenation of every
-    document's sorted unique shingle hashes (exactly ``shingle_hashes``'s
-    output per document), ``starts`` has length len(raws)+1 with document
-    d's set at values[starts[d]:starts[d+1]].
-
-    Documents shorter than k (including empty ones) take the scalar
-    fallback — their single whole-string window does not fit the global
-    k-window sweep; everything else is hashed in ONE polynomial prefix
-    pass over the concatenated bytes. The global-prefix trick: with Q the
-    prefix sum of byte[t]*B^t over GLOBAL positions t, a window starting
-    at global position i inside one document has
-    (Q[i+k]-Q[i]) * B^-i  ==  the document-local polynomial — the B^o
-    offset of the document's start cancels — so per-document values are
-    identical to the scalar path; windows that would cross a document
-    boundary are simply never emitted.
-    """
-    d = len(raws)
-    lens = np.fromiter((len(r) for r in raws), dtype=np.int64, count=d)
-    # scalar-fallback docs: effective length (empty -> 1 zero byte) < k
-    small = np.maximum(lens, 1) < k
-    big_idx = np.flatnonzero(~small)
-    parts: list[np.ndarray | None] = [None] * d
-    for i in np.flatnonzero(small):
-        parts[i] = shingle_hashes(raws[i], k)
-    if big_idx.size:
-        blobs = [raws[i] if lens[i] else b"\x00" for i in big_idx]
-        L = np.fromiter((len(x) for x in blobs), dtype=np.int64,
-                        count=len(blobs))
-        allb = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-        n = allb.size
-        pw, ipw = _powers(n)
-        q = np.empty(n + 1, dtype=U64)
-        q[0] = 0
-        np.cumsum(allb.astype(U64) * pw[:n], out=q[1:], dtype=U64)
-        h = (q[k:] - q[: n - k + 1]) * ipw[: n - k + 1]
-        # valid window starts per doc: offs[j] .. offs[j] + L[j] - k
-        n_win = L - k + 1
-        offs = np.concatenate(([0], np.cumsum(L)))[:-1]
-        seg = np.repeat(np.arange(big_idx.size, dtype=np.int64), n_win)
-        first = np.concatenate(([0], np.cumsum(n_win)))[:-1]
-        pos = (np.arange(int(n_win.sum()), dtype=np.int64)
-               - np.repeat(first, n_win) + np.repeat(offs, n_win))
-        hv = mix64(h[pos])
-        order = np.lexsort((hv, seg))
-        sv, ss = hv[order], seg[order]
-        keep = np.empty(sv.size, dtype=bool)
-        keep[0] = True
-        np.not_equal(sv[1:], sv[:-1], out=keep[1:])
-        keep[1:] |= ss[1:] != ss[:-1]
-        uniq_vals = sv[keep]
-        counts = np.bincount(ss[keep], minlength=big_idx.size)
-        if not small.any():
-            starts = np.concatenate(([0], np.cumsum(counts)))
-            return uniq_vals, starts
-        ustarts = np.concatenate(([0], np.cumsum(counts)))
-        for j, i in enumerate(big_idx):
-            parts[i] = uniq_vals[ustarts[j]:ustarts[j + 1]]
-    sizes = np.fromiter((p.size for p in parts), dtype=np.int64, count=d)
+    """``shingle_hashes`` of every document, as (values, starts). One sort
+    per document: a batch-wide (document, value) sort of all windows cost
+    ~6x more per document."""
+    parts = [shingle_hashes(r, k) for r in raws]
+    sizes = np.fromiter((p.size for p in parts), dtype=np.int64,
+                        count=len(parts))
     starts = np.concatenate(([0], np.cumsum(sizes)))
     return (np.concatenate(parts) if parts else
             np.empty(0, dtype=U64)), starts
@@ -303,9 +144,12 @@ def shingle_sets_batch(raws: list[bytes], k: int) -> tuple[np.ndarray,
 
 def minhash_oph_batch(values: np.ndarray, starts: np.ndarray, n: int,
                       seed: int) -> np.ndarray:
-    """``minhash_oph`` for every document of a (values, starts) batch —
-    returns uint64[(n_docs, n)], row d identical to
-    ``minhash_oph(values[starts[d]:starts[d+1]], n, seed)``."""
+    """One-permutation MinHash (Li/Owen/Zhang '12) with circular
+    densification (Shrivastava/Li '14) — uint64[(n_docs, n)]. Each shingle
+    hash is rehashed once into bin h mod n, each bin keeps its minimum, and
+    an empty bin borrows the nearest non-empty bin to its right (circular),
+    remixed with the borrow distance so different sparsity patterns don't
+    fake agreement. O(m), with E[bin_a == bin_b] ~= Jaccard."""
     d = starts.size - 1
     MAXV = np.iinfo(np.uint64).max
     h = mix64(values ^ U64(seed & 0xFFFFFFFFFFFFFFFF) ^ _GOLDEN)
@@ -316,42 +160,45 @@ def minhash_oph_batch(values: np.ndarray, starts: np.ndarray, n: int,
     np.minimum.at(vals, doc * n + bins, h)
     vals = vals.reshape(d, n)
     empty = vals == MAXV
-    filled = ~empty
-    vals[filled] = mix64(vals[filled])
-    if empty.any():
-        out = vals.copy()
-        src = vals.copy()
-        remaining = empty.copy()
-        shift = 1
-        while remaining.any():
-            rolled = np.roll(src, -shift, axis=1)
-            take = remaining & (rolled != MAXV)
-            off = U64((shift * int(_GOLDEN)) & 0xFFFFFFFFFFFFFFFF)
-            out[take] = mix64(rolled[take] ^ off)
-            remaining &= ~take
-            shift += 1
-        vals = out
-    return vals
+    # remix the filled minima: raw minima satisfy value % n == bin, so their
+    # low bits are bin-determined and IDENTICAL across documents — b-bit
+    # sketches over them would always agree. mix64 is a bijection, so
+    # equality semantics (same minimum element <=> equal value) survive.
+    vals[~empty] = mix64(vals[~empty])
+    # a row without shingles has no bin to borrow from and would never leave
+    # the loop below; shingle_hashes never yields one, but stay total
+    no_sh = starts[1:] == starts[:-1]
+    if no_sh.any():
+        vals[no_sh] = mix64(np.arange(n, dtype=U64) + U64(seed & 0xFFFF))
+        empty[no_sh] = False
+    out = vals.copy()
+    remaining = empty
+    shift = 1
+    while remaining.any():
+        rolled = np.roll(vals, -shift, axis=1)
+        take = remaining & (rolled != MAXV)
+        off = U64((shift * int(_GOLDEN)) & 0xFFFFFFFFFFFFFFFF)
+        out[take] = mix64(rolled[take] ^ off)
+        remaining &= ~take
+        shift += 1
+    return out
 
 
 def simhash64_batch(values: np.ndarray, starts: np.ndarray,
                     chunk_docs: int = 4096) -> np.ndarray:
-    """``simhash64`` per document — returns uint64[n_docs]. One
-    ``np.unpackbits`` pass per chunk of documents, then per-document
-    bit-plane sums over views of the shared bit matrix. (Segment sums via
-    ``np.add.reduceat`` were measured to stall 18-26 s on the FIRST large
-    call in every forked Spark worker on the bench VM — some one-time
-    per-process cost in that ufunc path; ``ndarray.sum`` has no such
-    pathology and the per-document loop costs only ~3 us/doc of call
-    overhead.)"""
+    """Charikar 64-bit SimHash over each (unweighted) shingle set —
+    uint64[n_docs]; bit j is 1 iff sum over features of (2*bit_j - 1) > 0.
+
+    One little-endian ``np.unpackbits`` pass per chunk of documents, then
+    per-document bit-plane sums over views of it. ``np.add.reduceat``
+    segment sums stalled 18-26 s on the first large call in every forked
+    Spark worker; the per-document ``ndarray.sum`` costs ~3 us/doc."""
     d = starts.size - 1
     out = np.zeros(d, dtype=U64)
     weights = np.uint64(1) << np.arange(64, dtype=U64)
     for lo in range(0, d, chunk_docs):
         hi = min(lo + chunk_docs, d)
         seg = np.ascontiguousarray(values[starts[lo]:starts[hi]])
-        if seg.size == 0:
-            continue
         bits = np.unpackbits(seg.view(np.uint8).reshape(-1, 8),
                              axis=1, bitorder="little")
         rel = (starts[lo:hi + 1] - starts[lo]).astype(np.int64)
@@ -360,15 +207,16 @@ def simhash64_batch(values: np.ndarray, starts: np.ndarray,
             bits[rel[j]:rel[j + 1]].sum(axis=0, dtype=np.int64,
                                         out=acc[j])
         m = np.diff(starts[lo:hi + 1]).astype(np.int64)
-        signs = (2 * acc - m[:, None]) > 0
+        signs = (2 * acc - m[:, None]) > 0     # sum(2b-1) = 2*sum(b) - m
         out[lo:hi] = (signs * weights[None, :]).sum(axis=1, dtype=U64)
     return out
 
 
 def band_keys_batch(sig: np.ndarray, bands: int, rows: int,
                     seed: int) -> np.ndarray:
-    """``band_keys`` per document over a uint64[(n_docs, n)] signature
-    matrix — returns uint64[(n_docs, bands)]."""
+    """LSH band keys over a uint64[(n_docs, n)] signature matrix —
+    uint64[(n_docs, bands)]. Key b starts at a per-band seed and folds in
+    each of its r signature values: key = mix64(key ^ v)."""
     sig3 = sig.reshape(sig.shape[0], bands, rows)
     keys = np.broadcast_to(hash_seeds(bands, seed ^ 0x5CA1AB1E),
                            (sig.shape[0], bands)).copy()
@@ -378,15 +226,14 @@ def band_keys_batch(sig: np.ndarray, bands: int, rows: int,
 
 
 def pack_bbit_batch(mh: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray]:
-    """``pack_bbit`` per document — returns (lo, hi) int64[n_docs]."""
+    """b-bit MinHash sketch (b=2, Li & Koenig '10) per document: the low 2
+    bits of the first m (<=64) minhash values packed into two int64 words —
+    slot i occupies bits 2(i%32), 2(i%32)+1 of word i//32. Unused slots are zero
+    (callers mask them out of comparisons). Returns (lo, hi) int64[n_docs]
+    (Spark LongType is signed; the bit pattern is kept)."""
     m = min(m, 64, mh.shape[1])
-    bb = mh[:, :m] & U64(3)
-    n_lo = min(m, 32)
-    lo = (bb[:, :n_lo] << (U64(2) * np.arange(n_lo, dtype=U64))[None, :]
-          ).sum(axis=1, dtype=U64)
-    if m > 32:
-        hi = (bb[:, 32:m] << (U64(2) * np.arange(m - 32, dtype=U64))[None, :]
-              ).sum(axis=1, dtype=U64)
-    else:
-        hi = np.zeros(mh.shape[0], dtype=U64)
+    shifts = U64(2) * (np.arange(m, dtype=U64) % U64(32))
+    packed = (mh[:, :m] & U64(3)) << shifts[None, :]
+    lo = packed[:, :32].sum(axis=1, dtype=U64)
+    hi = packed[:, 32:].sum(axis=1, dtype=U64)
     return lo.view(np.int64), hi.view(np.int64)

@@ -171,8 +171,9 @@ def run_stage_buckets(spark: SparkSession, ckpt: str, config_hash: str,
     bucket commits, so the whole-stage gate (stage_complete) never sees a
     partial stage as done.
 
-    A journal header pins (config_hash, n_buckets); any mismatch wipes the
-    stage directory and restarts — bucket membership depends on both. Each
+    A journal header pins (config_hash, n_buckets); a mismatch or a missing
+    journal wipes ``data/`` and restarts — bucket membership depends on
+    both, and a flat write of the same stage leaves part files there. Each
     bucket's journal line records its ROW COUNT, re-verified (parquet
     footer metadata only) on every resume: out-of-band corruption inside a
     committed bucket therefore recomputes that bucket instead of being
@@ -239,9 +240,11 @@ def run_stage_buckets(spark: SparkSession, ckpt: str, config_hash: str,
                 except Exception:
                     pass        # unreadable slice -> recompute
         else:       # different config/bucketing: nothing is reusable
-            shutil.rmtree(data, ignore_errors=True)
             os.remove(jpath)
     if not os.path.exists(jpath):
+        # no journal for this header: whatever data/ holds (another
+        # bucketing, or flat part files of a run_stage write) is stale
+        shutil.rmtree(data, ignore_errors=True)
         with open(jpath, "w") as f:
             f.write(json.dumps(header) + "\n")
 

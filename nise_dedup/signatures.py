@@ -3,15 +3,14 @@ keys — fused into ONE vectorized Arrow pass so each content string is
 scanned exactly once.
 
 `mapInPandas` streams Arrow record batches into the Python worker; inside,
-everything is NumPy (nise_dedup.hashing) vectorized ACROSS the documents of
-each batch (round 6): shingle hashing is one global polynomial-prefix pass
-over the batch's concatenated bytes, MinHash/SimHash/band keys operate on
-(n_docs, n) matrices. The earlier per-document loop paid ~40 small numpy
-calls per row (~1.9 ms/doc measured at sf1.0 — 95 core-seconds for 50k
-docs); the batch kernels are bit-identical (tests/test_signatures.py
-asserts parity against the frozen oracle) and ~10x cheaper. MinHash uses
-one-permutation hashing by default (DedupConfig.minhash_scheme); the
-classic "kperm" scheme keeps the per-document path (tests/reference only).
+everything is NumPy (nise_dedup.hashing): each document's shingle set is
+one window-polynomial pass and one sort of its own windows, concatenated
+into the batch's (values, starts) layout; MinHash, SimHash, band keys and
+the b-bit pack then run once per batch over all of its documents
+(tests/test_signatures.py asserts parity against the frozen oracle).
+MinHash uses one-permutation hashing by default
+(DedupConfig.minhash_scheme); the classic "kperm" scheme runs per
+document (tests/reference only).
 
 Output schema (the `signatures` relation, SURVEY §1.2):
   file_id long, n_shingles long, n_bytes long (normalized UTF-8 length),
@@ -41,9 +40,10 @@ SIGNATURE_SCHEMA_CORE = ("file_id long, n_shingles long, n_bytes long, "
 SIGNATURE_SCHEMA = SIGNATURE_SCHEMA_CORE + \
     ", minhash array<long>, band_keys array<long>"
 
-# bound the concatenated-bytes working set of one vectorized sub-batch:
-# the Arrow batch is row-capped (arrow_batch_rows), so megabyte documents
-# could otherwise make the prefix/power tables balloon
+# bound the bytes of one vectorized sub-batch: the Arrow batch is row-capped
+# (arrow_batch_rows), and up to one shingle per byte means megabyte documents
+# could otherwise balloon the batch's shingle values (8 B each) and
+# simhash's unpackbits matrix (64 B per shingle)
 _CHUNK_BYTES = 16 << 20
 
 

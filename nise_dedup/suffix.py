@@ -91,24 +91,3 @@ def longest_common_substring(a: bytes, b: bytes) -> int:
     i = saf[:-1][cross]
     j = saf[1:][cross]
     return int(_lcp_pairs(i, j, tables, lengths, n).max())
-
-
-_B = np.uint64(0x100000001B3)          # odd -> invertible mod 2^64
-_BINV = np.uint64(pow(0x100000001B3, -1, 1 << 64))
-
-
-def _rolling_hashes(b: np.ndarray, w: int) -> np.ndarray:
-    """Polynomial hashes of every w-gram of byte array b, O(n) vectorized:
-    H(i) = (Q[i+w] - Q[i]) * B^-i  with  Q[i] = sum_{j<i} b[j] * B^j  (mod 2^64).
-
-    The B^i / B^-i tables come from hashing's shared grown-on-demand cache
-    (round 6 — same base; rebuilding them per call was measurable inside
-    the deep cascade)."""
-    from nise_dedup.hashing import _powers
-
-    n = b.shape[0]
-    powers, inv_powers = _powers(n)
-    q = np.zeros(n + 1, dtype=np.uint64)
-    np.cumsum(b.astype(np.uint64) * powers[:n], out=q[1:], dtype=np.uint64)
-    return (q[w:] - q[: n - w + 1]) * inv_powers[: n - w + 1]
-

@@ -101,7 +101,7 @@ def _make_cascade(cfg: DedupConfig):
     import numpy as np
 
     from nise_dedup import hashing as H
-    from nise_dedup.suffix import _rolling_hashes, longest_common_substring
+    from nise_dedup.suffix import longest_common_substring
 
     k = cfg.shingle_k
     tau_j, exact_gate = cfg.tau_jaccard, cfg.est_exact_gate
@@ -115,7 +115,7 @@ def _make_cascade(cfg: DedupConfig):
         return e[1]
 
     def grams_of(e, w: int):
-        """Memoized sorted-unique w-gram rolling hashes of a participant's
+        """Memoized sorted-unique w-gram window hashes of a participant's
         normalized bytes + the first-occurrence index of each value.
         Building both tables per PAIR profiled at 69% of the whole cascade
         on the 1M corpus's deep residue (round 6); each participant rides
@@ -124,7 +124,7 @@ def _make_cascade(cfg: DedupConfig):
             e.append({})
         g = e[2].get(w)
         if g is None:
-            h = _rolling_hashes(np.frombuffer(e[0], dtype=np.uint8), w)
+            h = H.window_hashes(np.frombuffer(e[0], dtype=np.uint8), w)
             g = np.unique(h, return_index=True)   # (sorted vals, first idx)
             e[2][w] = g
         return g

@@ -219,6 +219,8 @@ def run_oracle(rows: list[dict], cfg, fast_signatures: bool = False) -> OracleRe
     """
     seeds = hash_seeds(cfg.num_perm, cfg.seed)
     if fast_signatures:
+        import numpy as np
+
         from nise_dedup import hashing as H
         np_seeds = H.hash_seeds(cfg.num_perm, cfg.seed)
 
@@ -226,12 +228,15 @@ def run_oracle(rows: list[dict], cfg, fast_signatures: bool = False) -> OracleRe
             sh = H.shingle_hashes(
                 H.normalize_text(text, cfg.normalize).encode("utf-8"),
                 cfg.shingle_k)
+            starts = np.array([0, sh.size])      # a one-document batch
             if cfg.minhash_scheme == "kperm":
                 mh = H.minhash(sh, np_seeds)
             else:
-                mh = H.minhash_oph(sh, cfg.num_perm, cfg.seed)
-            sim = int(H.simhash64(sh))
-            bk = [int(x) for x in H.band_keys(mh, cfg.bands, cfg.rows, cfg.seed)]
+                mh = H.minhash_oph_batch(sh, starts, cfg.num_perm,
+                                         cfg.seed)[0]
+            sim = int(H.simhash64_batch(sh, starts)[0])
+            bk = [int(x) for x in H.band_keys_batch(
+                mh[None, :], cfg.bands, cfg.rows, cfg.seed)[0]]
             return [int(x) for x in sh], [int(x) for x in mh], sim, bk
     else:
         def signature_of(text: str):

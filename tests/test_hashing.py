@@ -18,6 +18,11 @@ def u64(x):
     return int(np.uint64(x))
 
 
+def _row(sh):
+    """One document as a (values, starts) batch for the batch kernels."""
+    return sh, np.array([0, sh.size])
+
+
 @pytest.mark.parametrize("seed", [0, 1, 42, 2**63, 2**64 - 1])
 def test_mix64_matches(seed):
     xs = [0, 1, 7, 12345678901234567, 2**64 - 1, seed]
@@ -56,8 +61,8 @@ def test_minhash_simhash_bands_match():
         mh_np = H.minhash(sh_np, seeds_np)
         mh_py = O.minhash(sh_py, seeds_py)
         assert [u64(x) for x in mh_np] == mh_py
-        assert u64(H.simhash64(sh_np)) == O.simhash64(sh_py)
-        bk_np = H.band_keys(mh_np, 8, 4, 42)
+        assert u64(H.simhash64_batch(*_row(sh_np))[0]) == O.simhash64(sh_py)
+        bk_np = H.band_keys_batch(mh_np[None, :], 8, 4, 42)[0]
         bk_py = O.band_keys(mh_py, 8, 4, 42)
         assert [u64(x) for x in bk_np] == bk_py
 
@@ -69,7 +74,7 @@ def test_minhash_oph_matches_oracle():
         sh_np = H.shingle_hashes(text.encode(), 9)
         sh_py = [u64(x) for x in sh_np]
         for n in (8, 25, 125):
-            got = H.minhash_oph(sh_np, n, 42)
+            got = H.minhash_oph_batch(*_row(sh_np), n, 42)[0]
             want = O.minhash_oph(sh_py, n, 42)
             assert [u64(g) for g in got] == want, (trial, n)
 
@@ -81,8 +86,8 @@ def test_minhash_oph_estimates_jaccard():
     sa = H.shingle_hashes(a.encode(), 9)
     sb = H.shingle_hashes(b.encode(), 9)
     true_j = len(np.intersect1d(sa, sb)) / len(np.union1d(sa, sb))
-    ma = H.minhash_oph(sa, 256, 42)
-    mb = H.minhash_oph(sb, 256, 42)
+    ma = H.minhash_oph_batch(*_row(sa), 256, 42)[0]
+    mb = H.minhash_oph_batch(*_row(sb), 256, 42)[0]
     est = (ma == mb).mean()
     assert abs(est - true_j) < 0.12
 
@@ -92,7 +97,8 @@ def test_simhash_vectorized_matches_oracle_bitloop():
     for _ in range(8):
         sh = H.shingle_hashes(
             bytes(rng.randrange(256) for _ in range(rng.randint(1, 500))), 7)
-        assert u64(H.simhash64(sh)) == O.simhash64([u64(x) for x in sh])
+        assert u64(H.simhash64_batch(*_row(sh))[0]) == \
+            O.simhash64([u64(x) for x in sh])
 
 
 def test_minhash_chunking_invariant():

@@ -339,6 +339,32 @@ def test_bucket_journal_detects_corrupted_slice(spark, tmp_path):
     assert sorted(map(tuple, out2.collect())) == want
 
 
+def test_bucketed_rewrite_clears_flat_part_files(spark, tmp_path):
+    """A stage written flat and then recomputed bucketed over the same
+    checkpoint (an ``incremental_buckets`` toggle) keeps no flat part
+    files: with no journal for the current header, ``data/`` is cleared
+    before the first bucket commits."""
+    from pyspark.sql import functions as F
+
+    from nise_dedup.io import run_stage_buckets
+
+    base = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 7).alias("v"))
+    ckpt = str(tmp_path / "ck")
+    run_stage(spark, ckpt, "h1", "s", lambda: base,
+              extra_manifest={"layout": "flat"})
+    data = os.path.join(ckpt, "s", "data")
+    assert any(d.startswith("part-") for d in os.listdir(data))
+
+    out = run_stage_buckets(
+        spark, ckpt, "h1", "s", 4,
+        lambda b: base.where(F.pmod("k", F.lit(4)) == b),
+        extra_manifest={"layout": "b4"}, require_manifest={"layout": "b4"})
+    assert sorted(os.listdir(data)) == [f"part_bucket={b}" for b in range(4)]
+    assert out.count() == 100
+    assert read_manifest(ckpt, "s")["rows"] == 100
+
+
 def _pairs(res):
     return [(r["a"], r["b"], r["passed"])
             for r in res.verified_pairs.collect()]
