@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nise_dedup.instrument import barrier
+from nise_dedup.session import free_stored
 
 
 def _skew_join_min(rows: DataFrame, mins: DataFrame,
@@ -320,15 +321,20 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         if prev[0] <= small_edges:
             check_every = 1       # adaptive: see docstring
         steps = min(max(1, check_every), max_iter - it)
-        nxt = edges
+        rounds = [edges]
         for _ in range(steps):
             # lazy checkpoint EVERY round (plan truncation — the next
             # round's multiple references share one RDD, materialized once
             # by the batch's signature action below)
-            nxt = _small_star(_large_star(nxt, salts),
-                              salts).localCheckpoint(eager=False)
+            rounds.append(_small_star(_large_star(rounds[-1], salts),
+                                      salts).localCheckpoint(eager=False))
+        nxt = rounds.pop()
         with barrier("cc_sig_agg"):
             cur, maxdeg = _sig(nxt)  # batch's ONE action: check+materialize
+        # nxt is materialized: the input checkpoint and the rounds before
+        # it are superseded (the last round is kept: the result reads it)
+        for df in rounds:
+            free_stored(df)
         it += steps
         converged = cur == prev
         edges, prev = nxt, cur

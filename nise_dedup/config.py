@@ -166,11 +166,12 @@ class DedupConfig:
     arrow_batch_rows: int = 2048  # small batches: `content` can be megabytes
     shuffle_partitions: int = 64
     checkpoint_dir: str = ""      # stage manifests + CC checkpoints; "" = temp
-    incremental_buckets: int = 0  # >0 (ckpt mode only): the signature stage
-                                  # computes/commits per-bucket slices
-                                  # (io.run_stage_buckets) so a killed run
-                                  # resumes at bucket granularity; output is
-                                  # byte-identical, so this is execution-only
+    incremental_buckets: int = 0  # >0 (ckpt mode only): the signature and
+                                  # wave-1 verify stages commit per-bucket
+                                  # slices (io.run_stage(buckets=)) so a
+                                  # killed run resumes at bucket granularity;
+                                  # output is byte-identical, so this is
+                                  # execution-only
 
     # --- normalization (SURVEY §2.2 R1) feeding SHINGLING/LCS ONLY; the
     # stored `content` and its sha256 are never mutated (BASELINE invariant).

@@ -37,9 +37,8 @@ from pyspark.sql import functions as F
 from nise_dedup import cc, ingest, lsh, verify
 from nise_dedup.instrument import barrier
 from nise_dedup.config import DedupConfig
-from nise_dedup.io import (read_stage, run_stage, run_stage_buckets,
-                           write_stage)
-from nise_dedup.session import spread_width
+from nise_dedup.io import read_stage, run_stage, write_stage
+from nise_dedup.session import free_stored, spread_width
 from nise_dedup.signatures import compute_signatures
 
 FILES_COLS = ["file_id", "repo", "path", "commit", "lang",
@@ -73,14 +72,9 @@ class PipelineResult:
     def release(self) -> None:
         """Free every cache and local checkpoint this run stored
         (no-checkpoint mode). Frames over a released checkpoint can no
-        longer be read. ``unpersist`` reaches a cache but not a local
-        checkpoint, whose blocks live on the RDD under its LogicalRDD
-        plan."""
+        longer be read."""
         for df in self._persisted:
-            df.unpersist()
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.nodeName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
+            free_stored(df)
         self._persisted.clear()
 
 
@@ -105,19 +99,16 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         stored[name] = df
         return df
 
-    def gate(name, fn, buckets=0, pin=None, cache=False, **kw):
+    def gate(name, fn, buckets=0, pin=None, cache=False, partition_by=""):
         """Build stage ``name``: ``fn(b)`` returns bucket ``b`` of it, or
-        all of it when ``b`` is None. With a checkpoint the stage commits
-        whole, or per bucket when ``buckets`` is set; ``pin`` is the
-        layout its manifest records and must carry to be reused
-        (io.run_stage). Without one the stage is stored, or for a
-        ``cache`` stage persisted lazily."""
-        if ckpt and buckets:
-            return run_stage_buckets(spark, ckpt, ch, name, buckets, fn,
-                                     extra_manifest=pin, require_manifest=pin)
+        all of it when ``b`` is None. With a checkpoint io.run_stage
+        commits or reuses it, whole or per bucket when ``buckets`` is
+        set; ``pin`` is the layout its manifest records and must carry to
+        be reused. Without one the stage is stored, or for a ``cache``
+        stage persisted lazily."""
         if ckpt:
-            return run_stage(spark, ckpt, ch, name, lambda: fn(None),
-                             extra_manifest=pin, require_manifest=pin, **kw)
+            return run_stage(spark, ckpt, ch, name, fn, buckets, pin,
+                             partition_by)
         if not cache:
             return store(name, fn(None))
         df = fn(None).persist()
@@ -267,7 +258,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     # and reusing it as wave 1 would count wave 2 twice.
     def _wave2_stage():
         try:
-            box["v2"] = gate("verified_pairs_esc", _wave2, lineage=False)
+            box["v2"] = gate("verified_pairs_esc", _wave2)
         except BaseException as e:     # re-raised on the main thread
             box["err"] = e
     t = threading.Thread(target=_wave2_stage, daemon=True)
@@ -289,7 +280,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     # uniq holds one row per sha whose file_id is that sha's minimum: it
     # is the sha -> canonical map. Without a checkpoint run_stage returns
     # the lazy frame.
-    clusters = run_stage(spark, ckpt, ch, "clusters", lambda: (
+    clusters = run_stage(spark, ckpt, ch, "clusters", lambda _: (
         ingest.expand_exact(clusters_uniq, files,
                             winners=uniq.select("content_sha256",
                                                 "file_id"))))
@@ -340,8 +331,8 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     if ckpt:
         bands = lsh.explode_bands(signatures)
         write_stage(lsh.bucket_metrics(bands, cfg), "bucket_metrics",
-                    ckpt, ch, lineage=False)
-        write_stage(health, "rep_pair_health", ckpt, ch, lineage=False)
+                    ckpt, ch)
+        write_stage(health, "rep_pair_health", ckpt, ch)
     return PipelineResult(clusters=clusters, clusters_uniq=clusters_uniq,
                           verified_pairs=verified, metrics=metrics,
                           stages={"ingest": hashed, "uniq": uniq,

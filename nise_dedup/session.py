@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from nise_dedup.config import DedupConfig
 
@@ -46,6 +46,17 @@ def spread_width(shuffle_partitions: int, parallelism: int) -> int:
     tasks does the compute of two waves of 2x-core tasks with half the
     per-task overhead (A/B at sf1.0: warm pipeline wall 12-13 s -> 8-12 s)."""
     return min(shuffle_partitions, max(parallelism, 16))
+
+
+def free_stored(df: DataFrame) -> None:
+    """Free a frame's cache and, for a local checkpoint, its blocks:
+    ``unpersist`` reaches a cache but not a local checkpoint, whose
+    blocks live on the RDD under its LogicalRDD plan. A frame over a
+    freed local checkpoint can no longer be read."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def build_session(master: str | None = None,

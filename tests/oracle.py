@@ -70,7 +70,7 @@ def minhash(shingles: list[int], seeds: list[int]) -> list[int]:
 
 
 def minhash_oph(shingles: list[int], n: int, seed: int) -> list[int]:
-    """Independent reimplementation of nise_dedup.hashing.minhash_oph:
+    """Independent reimplementation of nise_dedup.hashing.minhash_oph_batch:
     one-permutation hashing, bin = h mod n, circular right-borrow
     densification remixed with the borrow distance."""
     vals: list = [None] * n
@@ -80,7 +80,7 @@ def minhash_oph(shingles: list[int], n: int, seed: int) -> list[int]:
         if vals[b] is None or h < vals[b]:
             vals[b] = h
     # remix filled minima (raw minima leak the bin index in their low bits;
-    # see nise_dedup.hashing.minhash_oph)
+    # see nise_dedup.hashing.minhash_oph_batch)
     vals = [mix64(v) if v is not None else None for v in vals]
     out = []
     for i in range(n):

@@ -128,3 +128,20 @@ def test_cc_hub_on_src_side_is_seen(spark):
                              auto_balance_rows=1_000, stats=stats)
         assert stats["max_hot_rows"] >= 3_000, stats
         assert stats["salts_used"] >= 2, stats
+
+
+def test_cc_distributed_frees_superseded_checkpoints(spark):
+    """The distributed path frees its input checkpoint and every
+    superseded round: a call leaves at most one new persistent RDD (the
+    last round, which the returned labels read), and the labels are
+    unchanged."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(200)],
+                                  "src long, dst long")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    stats = {}
+    comp = connected_components(chain, small_graph=0, stats=stats)
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert stats["iterations"] > 2, stats
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert got == {n: 0 for n in range(201)}

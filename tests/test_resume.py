@@ -14,6 +14,8 @@ from nise_dedup.pipeline import run_pipeline
 
 STAGES = ["ingest", "uniq", "signatures", "cand_pairs",
           "verified_pairs", "clusters_uniq", "clusters"]
+MANIFEST_KEYS = {"stage", "config_hash", "rows", "schema", "wall_s",
+                 "partitions", "completed_at_epoch"}
 
 
 def _clusters(res):
@@ -25,7 +27,7 @@ def test_stage_gate_skips_completed(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
     calls = []
 
-    def make():
+    def make(_):
         calls.append(1)
         return spark.range(5).withColumnRenamed("id", "x")
 
@@ -75,11 +77,11 @@ def test_partial_stage_write_is_recomputed(spark, tmp_path):
 
 def test_corrupt_manifest_is_recomputed(spark, tmp_path):
     ckpt = str(tmp_path / "ck3")
-    run_stage(spark, ckpt, "h", "s", lambda: spark.range(3))
+    run_stage(spark, ckpt, "h", "s", lambda _: spark.range(3))
     with open(os.path.join(ckpt, "s", "manifest.json"), "w") as f:
         f.write("{not json")
     assert not stage_complete(ckpt, "s", "h")
-    df = run_stage(spark, ckpt, "h", "s", lambda: spark.range(3))
+    df = run_stage(spark, ckpt, "h", "s", lambda _: spark.range(3))
     assert df.count() == 3
     assert json.load(open(os.path.join(ckpt, "s", "manifest.json")))["rows"] == 3
 
@@ -94,7 +96,7 @@ def test_killed_rerun_does_not_resurrect_old_manifest(spark, tmp_path,
     import nise_dedup.io as io_mod
 
     ckpt = str(tmp_path / "ck_kill")
-    run_stage(spark, ckpt, "hashA", "s", lambda: spark.range(4))
+    run_stage(spark, ckpt, "hashA", "s", lambda _: spark.range(4))
     assert stage_complete(ckpt, "s", "hashA")
 
     def boom(*a, **k):
@@ -106,7 +108,7 @@ def test_killed_rerun_does_not_resurrect_old_manifest(spark, tmp_path,
     monkeypatch.undo()
     assert not stage_complete(ckpt, "s", "hashA")
     assert not stage_complete(ckpt, "s", "hashB")
-    df = run_stage(spark, ckpt, "hashA", "s", lambda: spark.range(4))
+    df = run_stage(spark, ckpt, "hashA", "s", lambda _: spark.range(4))
     assert df.count() == 4
     assert stage_complete(ckpt, "s", "hashA")
 
@@ -119,7 +121,7 @@ def test_row_count_mismatch_recomputed(spark, tmp_path):
     ckpt = str(tmp_path / "ck_count")
     calls = []
 
-    def make():
+    def make(_):
         calls.append(1)
         return spark.range(10).repartition(4)
 
@@ -133,13 +135,11 @@ def test_row_count_mismatch_recomputed(spark, tmp_path):
 
 
 def test_bucket_gate_kill_mid_stage_resumes_missing_only(spark, tmp_path):
-    """F5b (run_stage_buckets) unit semantics: a kill after bucket 1 of 4
-    leaves a journal with buckets 0-1; resume recomputes ONLY 2-3 and the
-    final output is byte-identical to an uninterrupted run."""
+    """F5b (run_stage with buckets=4) unit semantics: a kill after bucket
+    1 of 4 leaves a journal with buckets 0-1; resume recomputes ONLY 2-3
+    and the final output is byte-identical to an uninterrupted run."""
     import pytest
     from pyspark.sql import functions as F
-
-    from nise_dedup.io import run_stage_buckets, stage_complete
 
     base = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("v"))
@@ -155,23 +155,23 @@ def test_bucket_gate_kill_mid_stage_resumes_missing_only(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
     first: list[int] = []
     with pytest.raises(RuntimeError, match="injected kill"):
-        run_stage_buckets(spark, ckpt, "h1", "s", 4, make_fn(first, fail_at=2))
+        run_stage(spark, ckpt, "h1", "s", make_fn(first, fail_at=2), 4)
     assert first == [0, 1]
     assert not stage_complete(ckpt, "s", "h1")    # no manifest yet
 
     second: list[int] = []
-    out = run_stage_buckets(spark, ckpt, "h1", "s", 4, make_fn(second))
+    out = run_stage(spark, ckpt, "h1", "s", make_fn(second), 4)
     assert second == [2, 3]                       # missing buckets only
     assert stage_complete(ckpt, "s", "h1")
-    clean = run_stage_buckets(
-        spark, str(tmp_path / "ck2"), "h1", "s", 4, make_fn([]))
+    clean = run_stage(
+        spark, str(tmp_path / "ck2"), "h1", "s", make_fn([]), 4)
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, clean.collect()))
     assert out.columns == ["k", "v"]              # bucket col is internal
 
     # config-hash change wipes the journal and recomputes everything
     third: list[int] = []
-    run_stage_buckets(spark, ckpt, "h2", "s", 4, make_fn(third))
+    run_stage(spark, ckpt, "h2", "s", make_fn(third), 4)
     assert third == [0, 1, 2, 3]
 
 
@@ -310,8 +310,6 @@ def test_bucket_journal_detects_corrupted_slice(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from nise_dedup.io import run_stage_buckets
-
     base = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("v"))
     log: list[int] = []
@@ -321,7 +319,7 @@ def test_bucket_journal_detects_corrupted_slice(spark, tmp_path):
         return base.where(F.pmod("k", F.lit(4)) == b)
 
     ckpt = str(tmp_path / "ck")
-    out = run_stage_buckets(spark, ckpt, "h1", "s", 4, fn)
+    out = run_stage(spark, ckpt, "h1", "s", fn, 4)
     want = sorted(map(tuple, out.collect()))
     assert log == [0, 1, 2, 3]
 
@@ -334,7 +332,7 @@ def test_bucket_journal_detects_corrupted_slice(spark, tmp_path):
         os.remove(p)
 
     log.clear()
-    out2 = run_stage_buckets(spark, ckpt, "h1", "s", 4, fn)
+    out2 = run_stage(spark, ckpt, "h1", "s", fn, 4)
     assert log == [1]                  # ONLY the corrupted bucket recomputed
     assert sorted(map(tuple, out2.collect())) == want
 
@@ -346,20 +344,17 @@ def test_bucketed_rewrite_clears_flat_part_files(spark, tmp_path):
     before the first bucket commits."""
     from pyspark.sql import functions as F
 
-    from nise_dedup.io import run_stage_buckets
-
     base = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("v"))
     ckpt = str(tmp_path / "ck")
-    run_stage(spark, ckpt, "h1", "s", lambda: base,
-              extra_manifest={"layout": "flat"})
+    run_stage(spark, ckpt, "h1", "s", lambda _: base, pin={"layout": "flat"})
     data = os.path.join(ckpt, "s", "data")
     assert any(d.startswith("part-") for d in os.listdir(data))
 
-    out = run_stage_buckets(
-        spark, ckpt, "h1", "s", 4,
+    out = run_stage(
+        spark, ckpt, "h1", "s",
         lambda b: base.where(F.pmod("k", F.lit(4)) == b),
-        extra_manifest={"layout": "b4"}, require_manifest={"layout": "b4"})
+        buckets=4, pin={"layout": "b4"})
     assert sorted(os.listdir(data)) == [f"part_bucket={b}" for b in range(4)]
     assert out.count() == 100
     assert read_manifest(ckpt, "s")["rows"] == 100
@@ -393,6 +388,14 @@ def test_mode_parity_with_escalation(spark, tmp_path):
         for s in ("verified_pairs", "verified_pairs_esc"):
             assert not ckpt or stage_complete(ckpt, s, cfg.config_hash()), \
                 (mode, s)
+        # the manifest contract, side tables included: the same base keys
+        # and per-partition lineage that sums to the stage's rows
+        for s in sorted(os.listdir(ckpt)) if ckpt else ():
+            m = read_manifest(ckpt, s)
+            assert MANIFEST_KEYS <= set(m), (mode, s)
+            parts = m["partitions"]
+            assert sum(p["rows_out"] for p in parts) == m["rows"], (mode, s)
+            assert parts or m["rows"] == 0, (mode, s)
         res.release()
     assert out["stored"] == out["flat"] == out["bucketed"]
 
@@ -416,7 +419,7 @@ def test_flat_two_wave_verified_pairs_recomputes(spark, tmp_path,
     assert res.stages["verified_pairs_esc"].count() > 0
     write_stage(spark.createDataFrame(both, res.verified_pairs.schema),
                 "verified_pairs", ckpt, cfg.config_hash(),
-                extra_manifest={"vp_buckets": 0})
+                pin={"vp_buckets": 0})
     assert "w1_buckets" not in read_manifest(ckpt, "verified_pairs")
 
     real = V.verify_pairs
