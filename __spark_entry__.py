@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from nise_dedup.queries import docs_as_corpus
 
     corpus = docs_as_corpus(spark, SF0001)
-    res = run_pipeline(spark, corpus, DedupConfig(shuffle_partitions=16))
+    res = run_pipeline(spark, corpus, DedupConfig())
     return res.clusters
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -164,8 +164,9 @@ class DedupConfig:
 
     # --- execution ---
     arrow_batch_rows: int = 2048  # small batches: `content` can be megabytes
-    shuffle_partitions: int = 64
-    checkpoint_dir: str = ""      # stage manifests + CC checkpoints; "" = temp
+    shuffle_partitions: int = 64  # the session's shuffle width
+                                  # (build_session) and the cap of
+                                  # session.task_width
     incremental_buckets: int = 0  # >0 (ckpt mode only): the signature and
                                   # wave-1 verify stages commit per-bucket
                                   # slices (io.run_stage(buckets=)) so a
@@ -179,8 +180,6 @@ class DedupConfig:
     # whitespace-churn duplicates signature-identical. "none": raw bytes.
     normalize: str = "ws"
 
-    extra: dict = field(default_factory=dict)
-
     def __post_init__(self) -> None:
         if self.num_perm != self.bands * self.rows:
             raise ValueError(
@@ -193,9 +192,8 @@ class DedupConfig:
     def config_hash(self) -> str:
         """Deterministic hash of every semantic knob (stable key order)."""
         d = asdict(self)
-        d.pop("extra", None)
         # execution-only knobs do not change output semantics
-        for k in ("arrow_batch_rows", "shuffle_partitions", "checkpoint_dir",
+        for k in ("arrow_batch_rows", "shuffle_partitions",
                   "incremental_buckets"):
             d.pop(k, None)
         blob = json.dumps(d, sort_keys=True).encode()

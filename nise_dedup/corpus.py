@@ -205,13 +205,3 @@ def to_pandas(rows: list[CorpusRow]):
         "commit": [r.commit for r in rows], "lang": [r.lang for r in rows],
         "content": [r.content for r in rows],
     })
-
-
-def truth_to_pandas(rows: list[CorpusRow]):
-    import pandas as pd
-    return pd.DataFrame({
-        "repo": [r.repo for r in rows], "path": [r.path for r in rows],
-        "commit": [r.commit for r in rows],
-        "gt_cluster": [r.gt_cluster for r in rows],
-        "dup_class": [r.dup_class for r in rows],
-    })

@@ -2,14 +2,14 @@
 
 ``run_stage`` is the only function that commits or reuses a stage, flat
 or bucketed. One reuse check: the stage is reused iff its manifest
-exists, its config hash and every ``pin`` key/value match, and the
-stored parquet row count equals the manifest's. Otherwise the stale
-manifest is removed FIRST, the data is written (whole, or one journaled
-bucket at a time), and ``_publish`` replaces ``manifest.json``
-atomically LAST: config hash, row count, schema, per-partition lineage,
-wall time and the pins. A kill leaves no manifest, so a resume
-recomputes that stage (or its missing buckets) only. This is what makes
-every stage resumable mid-run per BASELINE.json.
+exists, its config hash and every ``pin`` key/value match, its lineage
+sums to its row count, and the stored parquet row count equals the
+manifest's. Otherwise the stale manifest is removed FIRST, the data is
+written (whole, or one journaled bucket at a time), and ``_publish``
+replaces ``manifest.json`` atomically LAST: config hash, row count,
+schema, per-partition lineage, wall time and the pins. A kill leaves no
+manifest, so a resume recomputes that stage (or its missing buckets)
+only. This is what makes every stage resumable mid-run per BASELINE.json.
 """
 
 from __future__ import annotations
@@ -55,12 +55,17 @@ def read_stage(spark: SparkSession, ckpt: str, stage: str) -> DataFrame:
 
 
 def _complete(ckpt: str, stage: str, config_hash: str) -> dict | None:
-    """The stage's manifest if it is complete under ``config_hash``."""
+    """The stage's manifest if it is complete under ``config_hash``: it
+    records rows and a per-partition lineage that sums to them (a
+    manifest written without lineage recomputes once)."""
     try:
         m = read_manifest(ckpt, stage)
     except (OSError, json.JSONDecodeError):    # missing or torn
         return None
-    return m if m.get("config_hash") == config_hash and "rows" in m else None
+    if m.get("config_hash") != config_hash or "rows" not in m:
+        return None
+    lineage = sum(p["rows_out"] for p in m.get("partitions", []))
+    return m if lineage == m["rows"] else None
 
 
 def stage_complete(ckpt: str, stage: str, config_hash: str) -> bool:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from nise_dedup.config import DedupConfig
 from nise_dedup.instrument import barrier
-from nise_dedup.session import spread_width
+from nise_dedup.session import task_width
 
 
 def explode_bands(signatures: DataFrame) -> DataFrame:
@@ -82,9 +82,8 @@ def salted_buckets(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     # this repartition feeds the salted CACHE the self-join co-partitions
     # on, so its width sets the task count of every downstream pair stage;
     # per-key load stays bounded by the salting itself, not the width
-    width = spread_width(cfg.shuffle_partitions,
-                         bands.sparkSession.sparkContext.defaultParallelism)
-    return salted.repartition(width, "band_id", "band_key", "salt")
+    return salted.repartition(task_width(bands.sparkSession),
+                              "band_id", "band_key", "salt")
 
 
 def bucket_metrics(bands: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -38,22 +38,12 @@ from nise_dedup import cc, ingest, lsh, verify
 from nise_dedup.instrument import barrier
 from nise_dedup.config import DedupConfig
 from nise_dedup.io import read_stage, run_stage, write_stage
-from nise_dedup.session import free_stored, spread_width
+from nise_dedup.session import (ensure_min_partitions, free_stored,
+                                 task_width)
 from nise_dedup.signatures import compute_signatures
 
 FILES_COLS = ["file_id", "repo", "path", "commit", "lang",
               "content_sha256", "n_bytes"]
-
-
-def ensure_min_partitions(df: DataFrame, n: int) -> DataFrame:
-    """Repartition ONLY when underpartitioned (e.g. the corpus arrived as a
-    single unsplittable parquet row group, so every narrow stage — including
-    the Arrow signature UDF — would run on one core). On a real cluster the
-    scan has natural splits and this is a no-op; the check is plan metadata,
-    not an action."""
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 @dataclass
@@ -123,10 +113,8 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         # the repartition exists to parallelize the CPU-heavy signature
         # pass, whose round-robin rows are uniform; every downstream scan
         # of the ingest/uniq/signature caches inherits this width
-        return ensure_min_partitions(
-            df.select(*FILES_COLS, "content"),
-            spread_width(cfg.shuffle_partitions,
-                         spark.sparkContext.defaultParallelism))
+        return ensure_min_partitions(df.select(*FILES_COLS, "content"),
+                                     task_width(spark))
     hashed = gate("ingest", _ingest, cache=True)
     # `files` is a projection, not a stage: column pruning means metadata
     # consumers never read content pages. Without a checkpoint it is

@@ -19,23 +19,11 @@ from pyspark.sql import functions as F
 
 from nise_dedup import textops, vectors
 from nise_dedup.config import DedupConfig
+from nise_dedup.session import ensure_min_partitions
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Hash-repartition a scan before a CPU-heavy Python mapper (guide §2.2/
-    §4): the sf testdata parquet files are single row groups, so the scan —
-    and every narrow stage fused onto it, including mapInPandas — otherwise
-    runs on ONE core (measured: s234_signatures 10.2s -> 1.5s at sf1.0 on
-    local[32]). Keyed by a deterministic column via the caller's first
-    column; values are row-wise, so results are partition-independent. On a
-    real cluster the scan has natural splits and the exchange is ~free
-    (tiny tables); n defaults to the session's default parallelism."""
-    n = n or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, df.columns[0])
 
 
 def docs_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,13 +102,23 @@ FROM documents GROUP BY sha256(text)
 # signature stage (S1; S2-S4 are hash-defined -> rows-only)
 # --------------------------------------------------------------------------
 
+def _signature_input(spark, sf_dir):
+    """`documents` in the signature UDF's input shape, spread to one
+    partition per core (the sf files are single row groups). One task per
+    core rather than session.task_width, whose floor of 16 measured slower
+    at sf0.1 on 4 cores (median warm rep of 5 fresh-JVM runs: s1 0.73 ->
+    1.39 s, s234 0.76 -> 1.43 s)."""
+    return ensure_min_partitions(_t(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("file_id"), F.col("text").alias("content")),
+        spark.sparkContext.defaultParallelism)
+
+
 def q_s1_shingle_counts(spark, sf_dir):
     # n_shingles from the REAL fused signature UDF; DuckDB recomputes the
     # distinct char-9-gram count relationally (documents are pure ASCII, so
     # char grams == byte grams).
     from nise_dedup.signatures import compute_signatures
-    d = _spread(_t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("file_id"), F.col("text").alias("content")))
+    d = _signature_input(spark, sf_dir)
     return (compute_signatures(d, _SIG_CFG)
             .select(F.col("file_id").alias("doc_id"), "n_shingles"))
 
@@ -139,8 +137,7 @@ def q_s234_signatures(spark, sf_dir):
     # MinHash/SimHash/band keys: hash-defined, rows-only check (parity with
     # the frozen oracle is asserted in tests/test_signatures.py instead).
     from nise_dedup.signatures import compute_signatures
-    d = _spread(_t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("file_id"), F.col("text").alias("content")))
+    d = _signature_input(spark, sf_dir)
     return (compute_signatures(d, _SIG_CFG)
             .select("file_id", "n_shingles", "simhash",
                     F.size("minhash").cast("long").alias("sig_len"),
@@ -708,7 +705,7 @@ FROM documents
 def q_dedup_documents(spark, sf_dir):
     from nise_dedup.pipeline import run_pipeline
     corpus = docs_as_corpus(spark, sf_dir)
-    res = run_pipeline(spark, corpus, DedupConfig(shuffle_partitions=32))
+    res = run_pipeline(spark, corpus, DedupConfig())
     return (res.clusters
             .groupBy("cluster_id")
             .agg(F.count("*").alias("cluster_size"))
@@ -726,7 +723,7 @@ def q_dedup_documents_invariant(spark, sf_dir):
     DuckDB knows all three must equal count(*) over `documents`."""
     from nise_dedup.pipeline import run_pipeline
     corpus = docs_as_corpus(spark, sf_dir)
-    res = run_pipeline(spark, corpus, DedupConfig(shuffle_partitions=32),
+    res = run_pipeline(spark, corpus, DedupConfig(),
                        collect_metrics=False)
     hist = (res.clusters
             .groupBy("cluster_id")

@@ -39,13 +39,40 @@ def default_driver_memory(meminfo: str = "/proc/meminfo",
     return f"{max(512, total // 2 // 2**20)}m"
 
 
-def spread_width(shuffle_partitions: int, parallelism: int) -> int:
-    """Width of the spread repartitions (ingest and salted buckets): one
-    task per core with a floor of 16, capped by ``shuffle_partitions`` so
-    explicit small-run configs keep their layout. One wave of core-count
+def task_width(spark: SparkSession, items: int | None = None) -> int:
+    """Partition count of every CPU-heavy pipeline stage that sets its own
+    width: the ingest spread that feeds the signature UDF, the salted
+    buckets and the deep-verify mapper. It reads the core count
+    ``defaultParallelism`` and the cap ``spark.sql.shuffle.partitions``,
+    which ``build_session`` sets from ``cfg.shuffle_partitions``. (The
+    sf-query scans in ``queries`` and ``vectors`` keep one task per core:
+    on their one-shot inputs the floor of 16 measured slower.)
+
+    Without ``items``: one task per core with a floor of 16, capped so
+    explicit small-run sessions keep their layout. One wave of core-count
     tasks does the compute of two waves of 2x-core tasks with half the
-    per-task overhead (A/B at sf1.0: warm pipeline wall 12-13 s -> 8-12 s)."""
-    return min(shuffle_partitions, max(parallelism, 16))
+    per-task overhead (A/B at sf1.0: warm pipeline wall 12-13 s -> 8-12 s).
+
+    With ``items`` (the deep-verify residue): one task per 512 items, at
+    most 4x the cap. Coarser tasks left a 20% straggler tail at 1M
+    files/local[8]; finer ones pay ~200 ms of Arrow and worker setup per
+    near-empty Python task."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if items is None:
+        return min(cap, max(spark.sparkContext.defaultParallelism, 16))
+    return max(1, min(4 * cap, -(-items // 512)))
+
+
+def ensure_min_partitions(df: DataFrame, n: int) -> DataFrame:
+    """Repartition ONLY when underpartitioned (e.g. the input arrived as a
+    single unsplittable parquet row group, so every narrow stage — an
+    Arrow UDF included — would run on one core; s234_signatures at sf1.0
+    on local[32]: 10.2 s on one core, 1.5 s spread). On a real cluster the
+    scan has natural splits and this is a no-op; the check is plan
+    metadata, not an action."""
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
+    return df
 
 
 def free_stored(df: DataFrame) -> None:
@@ -102,7 +129,8 @@ def build_session(master: str | None = None,
         # dedup whose rows expand ~60x when vectors attach downstream ran
         # as ONE 8.5s-CPU task), so coalescing below the core count
         # serializes them. CPU-heavy Python stages additionally pin their
-        # own width with explicit repartitions, which AQE never overrides.
+        # own width (task_width) with explicit repartitions, which AQE
+        # never overrides.
         .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         # prefer shuffled-hash over sort-merge when sizes allow (guide §3.1/
         # §9): the pipeline's equi-joins are id-keyed and fixed-width; the

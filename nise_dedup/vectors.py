@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from nise_dedup.config import DedupConfig
 from nise_dedup import lsh as L
+from nise_dedup.session import ensure_min_partitions
 
 
 # --------------------------------------------------------------------------
@@ -105,16 +106,18 @@ def lsh_code_bands(embeddings: DataFrame, tables: int = 16, bits: int = 12,
     """Banded sign codes in the band-table shape (file_id, band_id,
     band_key) so the candidate stage is EXACTLY the text pipeline's
     salted/capped L2+L3 machinery. The input is spread to at least one
-    partition per core before the Arrow mapper (round 6): the sandbox
+    partition per core before the Arrow mapper: the sf testdata
     embedding tables are single parquet row groups, so the GEMM stage —
     and the band-count aggregation fused onto it — otherwise runs on one
     task; on a real cluster the scan has natural splits and this is a
-    plan-metadata no-op. Codes are row-wise deterministic (seeded planes
-    per worker), so results are partition-independent."""
-    from nise_dedup.pipeline import ensure_min_partitions
-    df = embeddings.select(F.col(id_col), F.col(vec_col))
+    plan-metadata no-op. One per core rather than session.task_width,
+    whose floor of 16 measured slower at sf0.1 on 4 cores (median warm
+    rep of 5 fresh-JVM runs: lsh_embedding_buckets 0.71 -> 1.48 s). Codes
+    are row-wise deterministic (seeded planes per worker), so results are
+    partition-independent."""
     df = ensure_min_partitions(
-        df, df.sparkSession.sparkContext.defaultParallelism)
+        embeddings.select(id_col, vec_col),
+        embeddings.sparkSession.sparkContext.defaultParallelism)
     return df.mapInPandas(
         _band_mapper(tables, bits, seed, id_col, vec_col),
         schema="file_id long, band_id int, band_key long")
@@ -180,7 +183,8 @@ def cosine_topk_bruteforce(embeddings: DataFrame, n_queries: int = 10,
                 "neighbor_id": np.repeat(pdf[id_col].to_numpy(), m),
                 "cosine": S.reshape(-1)})
 
-    from nise_dedup.pipeline import ensure_min_partitions
+    # one partition per core, as in lsh_code_bands (task_width's floor of
+    # 16: knn_bruteforce at sf0.1 on 4 cores 0.90 -> 1.40 s)
     corpus_side = ensure_min_partitions(
         embeddings.select(id_col, vec_col),
         embeddings.sparkSession.sparkContext.defaultParallelism)
@@ -217,15 +221,18 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     cfg = cfg or DedupConfig()
     bands = lsh_code_bands(embeddings, tables, bits, seed, id_col, vec_col)
     pairs = L.candidate_pairs(bands, cfg, handles=handles)
-    # explicit width for the CPU-heavy GEMM stage (round 6): AQE's
-    # size-based partition coalescing (session.py) would otherwise fold the
-    # re-rank into a handful of tasks — its cost is compute per pair, not
-    # bytes, so like the signature/deep mappers it pins its own
-    # parallelism; hash on `a` so the per-task vector reuse stays. The pin
-    # goes on the SLIM pair table BEFORE the vector attach (guide §2.3 —
-    # shuffle keys, not payloads): repartitioning after the joins moved
-    # ~0.5 KB of attached vectors per pair through the exchange when 16
-    # bytes of ids fix the same stage width. The pin holds in the
+    # explicit width for the CPU-heavy GEMM stage: AQE's size-based
+    # partition coalescing (session.py) would otherwise fold the re-rank
+    # into a handful of tasks — its cost is compute per pair, not bytes, so
+    # like the signature/deep mappers it pins its own parallelism; hash on
+    # `a` so the per-task vector reuse stays. Two tasks per core rather
+    # than session.task_width: its floor of 16 here and in lsh_code_bands
+    # measured slower at sf0.1 on 4 cores (median warm rep of 5 fresh-JVM
+    # runs: embedding_neardup 2.56 -> 3.68 s, ann_planted_recall 2.90 ->
+    # 4.61 s). The pin goes on the SLIM pair table BEFORE the vector attach
+    # (guide §2.3 — shuffle keys, not payloads): repartitioning after the
+    # joins moved ~0.5 KB of attached vectors per pair through the exchange
+    # when 16 bytes of ids fix the same stage width. The pin holds in the
     # broadcast regime, where the attach joins keep the pair side's
     # partitioning; in the shuffled-hash regime the second attach join
     # re-shuffles the pair side on `b`, so the GEMM stage runs at that

@@ -31,13 +31,7 @@ from pyspark.sql import functions as F
 from nise_dedup import instrument
 from nise_dedup.config import DedupConfig
 from nise_dedup.instrument import barrier
-
-# Wave-1 deep width: DEEP_PARTITION_FACTOR x shuffle_partitions tasks, but
-# no fewer than DEEP_PAIRS_PER_TASK pairs per task. Coarser tasks left a 20%
-# straggler tail at 1M files/local[8]; finer ones pay ~200 ms of Arrow and
-# worker setup per near-empty Python task.
-DEEP_PARTITION_FACTOR = 4
-DEEP_PAIRS_PER_TASK = 512
+from nise_dedup.session import task_width
 
 # verify_pairs' output columns and types (an empty wave is built from it)
 VERIFIED_SCHEMA = ("a long, b long, est double, jaccard double, hamming int, "
@@ -306,7 +300,7 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
     plan twice. Only for SMALL calls (rep pairs, the escalation wave —
     both bounded by the salting caps) where double-computing meta is
     cheaper than a barrier; the residue count is then unknown, so the
-    deep stage keeps the plain ``shuffle_partitions`` width.
+    deep stage takes the plain ``task_width`` of the session.
 
     ``formulation`` names the deep plan; "joined" is the only one.
 
@@ -339,10 +333,9 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
         n_deep = row["d"] or 0
         instrument.note("n_pairs", row["n"])
         instrument.note("n_deep", n_deep)
-        p_deep = max(1, min(cfg.shuffle_partitions * DEEP_PARTITION_FACTOR,
-                            -(-n_deep // DEEP_PAIRS_PER_TASK)))
+        p_deep = task_width(cand.sparkSession, n_deep)
     else:
-        p_deep = cfg.shuffle_partitions
+        p_deep = task_width(cand.sparkSession)
     if handles is not None:
         handles.append(meta)
     need = meta.where(deep_gate).select("a", "b", "est")

@@ -217,6 +217,25 @@ def test_post_signature_stages_stored(spark):
         res.release()
 
 
+def test_stage_widths_follow_session(spark):
+    """Stage widths come from the session, not the config: under a
+    config asking for 16 shuffle partitions, the local[4] session's cap
+    of 8 sizes both the ingest stage and the salted buckets."""
+    from nise_dedup import lsh
+    from nise_dedup.session import task_width
+
+    assert task_width(spark) == 8
+    rows = C.generate("tiny", seed=42)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    cfg = DedupConfig(shuffle_partitions=16)
+    res = run_pipeline(spark, df, cfg, collect_metrics=False)
+    salted = lsh.salted_buckets(lsh.explode_bands(res.stages["signatures"]),
+                                cfg)
+    assert res.stages["ingest"].rdd.getNumPartitions() == 8
+    assert salted.rdd.getNumPartitions() == 8
+    res.release()
+
+
 def test_release_frees_stored_stages(spark):
     """Repeated runs, each followed by release(), leave the session's
     storage as they found it: no persistent RDD and no stored byte

@@ -400,6 +400,36 @@ def test_mode_parity_with_escalation(spark, tmp_path):
     assert out["stored"] == out["flat"] == out["bucketed"]
 
 
+def test_manifest_without_lineage_recomputes(spark, tmp_path):
+    """A manifest whose per-partition lineage does not sum to its rows
+    (written before every stage recorded lineage) is not reused: that
+    stage recomputes and regains its lineage, every other gated stage is
+    reused as it stands."""
+    rows = C.generate("tiny", seed=2)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    cfg = DedupConfig(shuffle_partitions=8, bucket_cap=2)
+    ckpt = str(tmp_path / "ck")
+    want = _clusters(run_pipeline(spark, df, cfg, ckpt=ckpt,
+                                  collect_metrics=False))
+    side = ("bucket_metrics", "rep_pair_health")   # rewritten every run
+    before = {s: read_manifest(ckpt, s) for s in os.listdir(ckpt)
+              if s not in side}
+    blank = dict(before["verified_pairs_esc"], partitions=[])
+    assert blank["rows"] > 0
+    with open(os.path.join(ckpt, "verified_pairs_esc", "manifest.json"),
+              "w") as f:
+        json.dump(blank, f)
+
+    res = run_pipeline(spark, df, cfg, ckpt=ckpt, collect_metrics=False)
+    assert _clusters(res) == want
+    m = read_manifest(ckpt, "verified_pairs_esc")
+    assert m["partitions"] and m["rows"] == blank["rows"]
+    assert sum(p["rows_out"] for p in m["partitions"]) == m["rows"]
+    for s, m0 in before.items():
+        if s != "verified_pairs_esc":
+            assert read_manifest(ckpt, s) == m0, s
+
+
 def test_flat_two_wave_verified_pairs_recomputes(spark, tmp_path,
                                                  monkeypatch):
     """A flat verified_pairs checkpoint that holds BOTH verify waves under

@@ -1,7 +1,9 @@
 """Pure-Python tests (no Spark session) of the session's driver-memory
-default and the spread-width rule."""
+default and the task-width rule."""
 
-from nise_dedup.session import default_driver_memory, spread_width
+from types import SimpleNamespace
+
+from nise_dedup.session import default_driver_memory, task_width
 
 GIB = 2**30
 
@@ -42,10 +44,27 @@ def test_floor_on_tiny_machines(tmp_path):
         == "512m"
 
 
-def test_spread_width_per_core_count():
-    # one task per core, floor 16, capped by shuffle_partitions
-    assert spread_width(64, 4) == 16
-    assert spread_width(64, 8) == 16
-    assert spread_width(64, 32) == 32
-    assert spread_width(8, 4) == 8
-    assert spread_width(16, 32) == 16
+def _session(cores, shuffle_partitions):
+    """The two session values task_width reads, without a JVM."""
+    conf = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=cores),
+        conf=SimpleNamespace(get=conf.__getitem__))
+
+
+def test_task_width_per_core_count():
+    # one task per core, floor 16, capped by the session's shuffle width
+    assert task_width(_session(4, 64)) == 16
+    assert task_width(_session(8, 64)) == 16
+    assert task_width(_session(32, 64)) == 32
+    assert task_width(_session(4, 8)) == 8
+    assert task_width(_session(32, 16)) == 16
+    # with items: one task per 512, at least 1, at most 4x the cap
+    # (cap = 2 x cores, as perfbench and bench.py size their sessions)
+    for cores in (4, 8, 32):
+        s = _session(cores, 2 * cores)
+        assert task_width(s, 0) == 1
+        assert task_width(s, 512 * cores) == cores          # below the cap
+        assert task_width(s, 512 * cores + 1) == cores + 1
+        assert task_width(s, 512 * 6 * cores) == 6 * cores  # cap .. 4x cap
+        assert task_width(s, 10**7) == 8 * cores            # above 4x cap
